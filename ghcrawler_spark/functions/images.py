@@ -18,8 +18,13 @@ libraries, so:
   stub codec (`_FAKE_JPEG_MAGIC`) remains decodable for back-compat with
   fixtures written by older rounds.
 
-All entry points are vectorized over Arrow batches (one numpy pass per
-batch); nothing is per-row Python in the Spark plan.
+All entry points are pandas UDFs over Arrow batches, so no row crosses
+py4j on its own, but inside a batch each payload is still decoded by its
+own Python call. PNG decode, PSNR and mean are whole-array numpy per image;
+phash and resize loop over their few output cells. JPEG decode is numpy
+except its entropy decoder, which is table-driven but still a Python loop
+over the coded symbols (see ``functions/jpeg.py``) — the one per-symbol
+interpreter cost left in image validation.
 """
 
 from __future__ import annotations

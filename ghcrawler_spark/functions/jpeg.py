@@ -22,9 +22,15 @@ arithmetic-coded files are out of scope by design (documented container
 limitation), and truncated streams fail loudly rather than decode garbage.
 
 DCT/IDCT, color transform, quantization and un-zigzag are whole-array numpy
-(einsum over all blocks at once); only the entropy coder is a Python loop —
-it is inherently serial per block chain (DC prediction), and these payloads
-are small fixture images inside Arrow-batched UDFs.
+(einsum over all blocks at once). The entropy decoder is table-driven: one
+numpy pass unstuffs the scan and builds a 16-bit lookahead window at every
+bit position; each Huffman table gets a 65,536-entry peek table (cached per
+table spec), and a libjpeg-style fast-AC table yields run, size and signed
+value in one lookup whenever code length + magnitude bits fit in 16 bits.
+What stays a Python loop is one iteration per coded symbol (DC, AC, EOB,
+ZRL): the scan is serial (codes are variable-length and DC is predicted
+from the previous block), and these payloads are small fixture images
+inside Arrow-batched UDFs.
 
 Reference parity note: the reference crawler stores fetched payload bytes
 verbatim and never re-encodes (storageDocStore.js stores the response
@@ -34,6 +40,7 @@ body); the codec here exists for the VALIDATION stage of the graft
 
 from __future__ import annotations
 
+import functools
 import struct
 
 import numpy as np
@@ -134,9 +141,52 @@ def _huff_codes(bits: list[int], vals: list[int]):
     return enc
 
 
-def _huff_decode_table(bits: list[int], vals: list[int]):
-    """(length, code) → symbol, for the serial scan decoder."""
-    return {(l, c): v for v, (c, l) in _huff_codes(bits, vals).items()}
+def _huff_lookup(bits: bytes, vals: bytes) -> np.ndarray:
+    """16-bit peek → (code length << 8) | symbol; 0 where no code matches."""
+    t = np.zeros(1 << 16, dtype=np.int64)
+    for v, (c, l) in _huff_codes(list(bits), list(vals)).items():
+        t[c << (16 - l) : (c + 1) << (16 - l)] = (l << 8) | v
+    return t
+
+
+def _interned(keys: np.ndarray, entry=int) -> list:
+    """[entry(k) for k in keys], built once per distinct key and shared: a
+    65,536-entry table holds at most a few thousand distinct entries."""
+    uniq, inv = np.unique(keys, return_inverse=True)
+    objs = [entry(k) for k in uniq.tolist()]
+    return list(map(objs.__getitem__, inv.tolist()))
+
+
+# Tables are cached per Huffman spec; the bound keeps inputs that each carry
+# their own tables from growing the cache (an AC entry holds about 1 MB).
+@functools.lru_cache(maxsize=16)
+def _dc_table(bits: bytes, vals: bytes) -> list[int]:
+    if max(vals, default=0) > 16:
+        raise ValueError("DC Huffman value out of range")
+    return _interned(_huff_lookup(bits, vals))
+
+
+@functools.lru_cache(maxsize=16)
+def _ac_tables(bits: bytes, vals: bytes) -> tuple[list[int], list]:
+    """(peek table, fast table). The fast table maps a 16-bit peek straight to
+    (run, signed value, bits consumed) whenever code length + magnitude bits
+    fit in the peek (libjpeg's jdhuff.c "fast AC"); EOB, ZRL and longer
+    symbols are None and go through the peek table."""
+    t = _huff_lookup(bits, vals)
+    peek = np.arange(1 << 16)
+    length, rs = t >> 8, t & 0xFF
+    s = rs & 15
+    n = length + s
+    fits = (length > 0) & (rs != 0x00) & (rs != 0xF0) & (n <= 16)
+    v = (peek >> np.clip(16 - n, 0, 16)) & ((1 << s) - 1)
+    v = np.where(v < (1 << s) >> 1, v - (1 << s) + 1, v)  # EXTEND (F.2.2.1)
+    # pack (run, value, bits) into one key: |value| < 2^15, bits ≤ 16
+    key = np.where(fits, (rs >> 4) << 21 | (v + (1 << 15)) << 5 | n, -1)
+
+    def entry(k: int):
+        return (k >> 21, (k >> 5 & 0xFFFF) - (1 << 15), k & 31) if k >= 0 else None
+
+    return _interned(t), _interned(key, entry)
 
 
 def scale_qtable(base: np.ndarray, quality: int) -> np.ndarray:
@@ -200,53 +250,8 @@ class _BitWriter:
             self.write((1 << pad) - 1, pad)  # pad with 1s per spec
 
 
-class _BitReader:
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.nbits = 0
-
-    def _fill(self) -> None:
-        if self.pos >= len(self.data):
-            raise ValueError("truncated JPEG entropy stream")
-        b = self.data[self.pos]
-        self.pos += 1
-        if b == 0xFF:
-            if self.pos >= len(self.data):
-                raise ValueError("truncated JPEG entropy stream")
-            nxt = self.data[self.pos]
-            if nxt == 0x00:
-                self.pos += 1  # unstuff
-            else:
-                raise ValueError(f"unexpected marker 0xFF{nxt:02X} in scan")
-        self.acc = (self.acc << 8) | b
-        self.nbits += 8
-
-    def read_bit(self) -> int:
-        if self.nbits == 0:
-            self._fill()
-        self.nbits -= 1
-        bit = (self.acc >> self.nbits) & 1
-        self.acc &= (1 << self.nbits) - 1
-        return bit
-
-    def read_bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.read_bit()
-        return v
-
-
-def _extend(v: int, s: int) -> int:
-    """ITU-T81 F.2.2.1 EXTEND: s-bit magnitude → signed value."""
-    if s == 0:
-        return 0
-    return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
-
-
 def _magnitude(v: int) -> tuple[int, int]:
-    """signed value → (size s, s-bit code) — inverse of _extend."""
+    """signed value → (size s, s-bit code) — inverse of EXTEND (F.2.2.1)."""
     if v == 0:
         return 0, 0
     a = abs(v)
@@ -349,6 +354,110 @@ def jpeg_encode(pixels: np.ndarray, quality: int = 95) -> bytes:
 
 # --- decoder ----------------------------------------------------------------
 
+# Most bits one MCU of three blocks can consume: per block a DC code and its
+# magnitude (16 + 16) plus at most 63 AC symbols of code + magnitude (16 + 15).
+_MCU_MAX_BITS = 3 * (32 + 63 * 31)
+_WINDOW_SHIFTS = (8 - np.arange(8)).astype(np.uint32)
+
+
+def _bit_windows(scan: bytes) -> tuple[memoryview, int, str]:
+    """Unstuff the entropy-coded segment in one numpy pass and return
+    (win, nbits, overrun): win[p] is the 16 bits starting at bit p (a uint16
+    view, so only the windows the decoder reads become Python ints),
+    zero-filled past the end far enough that one MCU may overrun before the
+    caller checks ``pos > nbits``. The data stops at the first 0xFF not
+    followed by 0x00; decoding past it fails with ``overrun``."""
+    b = np.frombuffer(scan, dtype=np.uint8)
+    ff = np.flatnonzero(b == 0xFF)
+    bad = np.flatnonzero(np.append(b, 1)[ff + 1])  # a trailing 0xFF is bad too
+    overrun = "truncated JPEG entropy stream"
+    if bad.size:
+        i = int(ff[bad[0]])
+        if i + 1 < b.size:
+            overrun = f"unexpected marker 0xFF{b[i + 1]:02X} in scan"
+        b, ff = b[:i], ff[: bad[0]]
+    b = np.delete(b, ff + 1)
+    n = b.size
+    p = np.zeros(n + _MCU_MAX_BITS // 8 + 3, dtype=np.uint32)
+    p[:n] = b
+    v = (p[:-2] << 16) | (p[1:-1] << 8) | p[2:]
+    w = ((v[:, None] >> _WINDOW_SHIFTS) & 0xFFFF).astype(np.uint16)
+    return memoryview(w.ravel()), 8 * n, overrun
+
+
+def _scan_error(end: int, nbits: int, overrun: str, reason: str) -> ValueError:
+    """A bad symbol read from bits (up to bit ``end``) past the data is an
+    overrun, not a bad symbol."""
+    return ValueError(overrun if end > nbits else reason)
+
+
+def _decode_scan(
+    win: memoryview, nbits: int, overrun: str, n_mcus: int, tabs: list
+) -> list[int]:
+    """Entropy-decode an interleaved scan into zigzag-ordered coefficients,
+    laid out (MCU, scan component, 64). ``tabs`` holds one (DC peek, AC
+    peek, AC fast) triple per scan component. A symbol costs one window read
+    and one table index; off the fast path, one more of each for its
+    magnitude bits. A symbol read from bits past ``nbits`` fails with
+    ``overrun`` instead of its own error."""
+    out = [0] * (n_mcus * len(tabs) * 64)
+    pred = [0] * len(tabs)
+    pos = 0
+    base = 0
+    for _ in range(n_mcus):
+        for ci, (dc, ac, fast) in enumerate(tabs):
+            e = dc[win[pos]]
+            if not e:
+                raise _scan_error(pos + 16, nbits, overrun, "invalid Huffman code")
+            pos += e >> 8
+            s = e & 0xFF
+            if s:
+                v = win[pos] >> (16 - s)
+                pos += s
+                if v < 1 << (s - 1):
+                    v -= (1 << s) - 1
+                pred[ci] += v
+            out[base] = pred[ci]
+            k = 1
+            while k < 64:
+                w = win[pos]
+                f = fast[w]
+                if f:
+                    run, v, m = f
+                    k += run
+                    if k > 63:
+                        end = pos + (ac[w] >> 8)
+                        raise _scan_error(end, nbits, overrun, "AC index overflow")
+                    out[base + k] = v
+                    k += 1
+                    pos += m
+                    continue
+                e = ac[w]
+                if not e:
+                    raise _scan_error(pos + 16, nbits, overrun, "invalid Huffman code")
+                pos += e >> 8
+                rs = e & 0xFF
+                if rs == 0x00:  # EOB
+                    break
+                if rs == 0xF0:  # ZRL
+                    k += 16
+                    continue
+                k += rs >> 4
+                if k > 63:
+                    raise _scan_error(pos, nbits, overrun, "AC index overflow")
+                s = rs & 15  # ≥ 1: size-0 symbols all take the fast path
+                v = win[pos] >> (16 - s)
+                pos += s
+                if v < 1 << (s - 1):
+                    v -= (1 << s) - 1
+                out[base + k] = v
+                k += 1
+            base += 64
+        if pos > nbits:
+            raise ValueError(overrun)
+    return out
+
+
 def jpeg_decode(data: bytes) -> np.ndarray:
     """Baseline JFIF bytes → (h, w, 3) uint8 RGB. Parses real marker
     structure; raises ValueError on anything outside baseline 4:4:4."""
@@ -356,7 +465,7 @@ def jpeg_decode(data: bytes) -> np.ndarray:
         raise ValueError("not a JPEG (no SOI)")
     pos = 2
     qtables: dict[int, np.ndarray] = {}
-    htables: dict[tuple[int, int], dict] = {}
+    htables: dict[tuple[int, int], tuple[bytes, bytes]] = {}
     frame = None
     scan_comps = None
     scan_start = None
@@ -381,10 +490,9 @@ def jpeg_decode(data: bytes) -> np.ndarray:
             p = 0
             while p < len(payload):
                 tc, th = payload[p] >> 4, payload[p] & 15
-                bits = list(payload[p + 1 : p + 17])
+                bits = payload[p + 1 : p + 17]
                 n = sum(bits)
-                vals = list(payload[p + 17 : p + 17 + n])
-                htables[(tc, th)] = _huff_decode_table(bits, vals)
+                htables[(tc, th)] = (bits, payload[p + 17 : p + 17 + n])
                 p += 17 + n
         elif marker == 0xC0:  # SOF0 baseline
             prec, fh, fw, nc = struct.unpack(">BHHB", payload[:6])
@@ -417,54 +525,33 @@ def jpeg_decode(data: bytes) -> np.ndarray:
         raise ValueError("missing SOF0/SOS")
     fh, fw, comps = frame
 
+    if len(scan_comps) != len(comps):
+        raise ValueError("only one interleaved scan of every component supported")
+
     # entropy stream runs until the EOI marker
     end = data.rfind(b"\xff\xd9")
     if end < 0:
         raise ValueError("missing EOI")
-    br = _BitReader(data[scan_start:end])
-
-    def decode_huff(table: dict) -> int:
-        code = 0
-        for length in range(1, 17):
-            code = (code << 1) | br.read_bit()
-            sym = table.get((length, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid Huffman code")
+    tabs = []
+    for _cs, dc_id, ac_id in scan_comps:
+        dc_spec, ac_spec = htables.get((0, dc_id)), htables.get((1, ac_id))
+        if dc_spec is None or ac_spec is None:
+            raise ValueError("missing Huffman table for scan")
+        tabs.append((_dc_table(*dc_spec), *_ac_tables(*ac_spec)))
 
     ph, pw = -(-fh // 8) * 8, -(-fw // 8) * 8
     n_blocks = (ph // 8) * (pw // 8)
-    coefs = [np.zeros((n_blocks, 64), dtype=np.float64) for _ in range(3)]
-    prev_dc = [0, 0, 0]
-    for bi in range(n_blocks):
-        for ci, (_cs, dc_id, ac_id) in enumerate(scan_comps):
-            dc_t = htables.get((0, dc_id))
-            ac_t = htables.get((1, ac_id))
-            if dc_t is None or ac_t is None:
-                raise ValueError("missing Huffman table for scan")
-            s = decode_huff(dc_t)
-            prev_dc[ci] += _extend(br.read_bits(s), s)
-            coefs[ci][bi, 0] = prev_dc[ci]
-            k = 1
-            while k < 64:
-                rs = decode_huff(ac_t)
-                if rs == 0x00:  # EOB
-                    break
-                if rs == 0xF0:  # ZRL
-                    k += 16
-                    continue
-                k += rs >> 4
-                if k > 63:
-                    raise ValueError("AC index overflow")
-                coefs[ci][bi, k] = _extend(br.read_bits(rs & 15), rs & 15)
-                k += 1
+    win, nbits, overrun = _bit_windows(data[scan_start:end])
+    coefs = _decode_scan(win, nbits, overrun, n_blocks, tabs)
+    coefs = np.array(coefs, dtype=np.float64)
+    coefs = coefs.reshape(n_blocks, len(tabs), 64)
 
     chans = []
     for ci, (_cid, tq) in enumerate(comps):
         q = qtables.get(tq)
         if q is None:
             raise ValueError("missing quant table")
-        blocks = (coefs[ci][:, UNZIGZAG].reshape(-1, 8, 8)) * q
+        blocks = (coefs[:, ci][:, UNZIGZAG].reshape(-1, 8, 8)) * q
         px = np.einsum("ji,njk,kl->nil", _DCT, blocks, _DCT) + 128.0
         chans.append(_from_blocks(px, ph, pw)[:fh, :fw])
     return ycbcr_to_rgb(np.stack(chans, axis=-1))

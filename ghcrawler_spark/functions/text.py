@@ -59,7 +59,9 @@ def token_count_bpe(text: Column | str) -> Column:
     """BPE-ish token count: runs of letters, runs of digits, single symbols.
 
     regexp_count == len(regexp_extract_all(...)) for any input (same
-    non-overlapping match walk) without materializing the match array."""
+    non-overlapping match walk). It does not save the match array: Spark
+    rewrites regexp_count to size(regexp_extract_all(...)), so the array is
+    still built per row."""
     c = F.col(text) if isinstance(text, str) else text
     return F.regexp_count(F.lower(c), F.lit(BPE_TOKEN_RE))
 

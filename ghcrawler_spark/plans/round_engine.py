@@ -1545,8 +1545,11 @@ class CrawlEngine:
         # every one of them and the per-round plan grows multiplicatively —
         # measured to OOM the driver building plan strings. The checkpoint
         # truncates lineage to a leaf; blocks are freed after commit.
-        # (lazy: the histogram job right below is the serial first toucher,
-        # so the checkpoint materializes exactly once, in that job)
+        # (eager=False is not lazy under AQE: building the checkpoint's RDD
+        # runs every upstream shuffle and broadcast stage right here, as its
+        # own SQL execution — 4 jobs in round 1 of the small-round crawl
+        # benchmark. Only the last stage, which fills the checkpoint blocks,
+        # waits for the histogram job right below.)
         fetched = fetched.localCheckpoint(eager=False)
         # ONE job yields the whole outcome histogram (selected/requeued/
         # processed/...) — and, in measured mode, the round's min elapsed
@@ -1962,7 +1965,11 @@ class CrawlEngine:
         # branches read this frame, and its plan (links join + Bloom probe +
         # anti-joins) would otherwise be re-embedded in the enqueue/write
         # trees — truncate it like `fetched` above
-        # (lazy: the enqueue counts collect below is the serial first toucher)
+        # (as there, the call itself runs the upstream shuffle and broadcast
+        # stages — 17 jobs in round 1 of the small-round crawl benchmark.
+        # The last stage is not run serially either: the enqueue counts
+        # collect below reads `fresh` from several concurrent AQE jobs, 6
+        # in that round, and whichever reaches a partition first fills it.)
         fresh = (
             marked.withColumn(
                 "_bounced", F.coalesce(F.col("_bounced"), F.lit(False))

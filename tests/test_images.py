@@ -2,6 +2,9 @@
 stays within its quantization bound (>40 dB), phash is stable, and the J8
 validation join (BASELINE.json per-row invariant) passes on the fixture."""
 
+import hashlib
+import struct
+
 import numpy as np
 import pytest
 
@@ -175,3 +178,233 @@ def test_curation_gates_each_gate_fires_independently(spark):
         for gate in ("res_ok", "aspect_ok", "fmt_ok", "caption_gate_ok"):
             assert got[gate] == (gate != failing), f"row {rid} gate {gate}"
     assert out[0]["caption_tokens"] == len(good_caption.split())
+
+
+# --- baseline JPEG decoder: pinned output and guards ------------------------
+#
+# sha256 over (shape, RGB bytes) of every decoded image, in order. Pinned from
+# the bit-serial reference decoder, so any decoder rewrite must stay bit-exact.
+FIXTURE_JPEG_SHA256 = (
+    "4cc86ce9834a5aa36e5ff9c889921840ce35a66be8493a86b524029ba571d956"
+)
+MATRIX_JPEG_SHA256 = (
+    "ec2ed52cda23389d65603926aa566ea4abc77b923249a4e52701d2ec895e2f8b"
+)
+
+
+def fixture_jpegs() -> list[bytes]:
+    """The JPEG payloads of the seed-7 fixture corpus (the image benchmark's)."""
+    fx = fixtures.generate(seed=7, n_hosts=3)
+    return [bytes(b) for b, f in zip(fx.corpus["bytes"], fx.corpus["fmt"]) if f == "jpeg"]
+
+
+def matrix_jpegs() -> list[bytes]:
+    """Noise and smooth images at sizes off the 8-pixel grid, qualities 1-100."""
+    from ghcrawler_spark.functions.jpeg import jpeg_encode
+
+    rng = np.random.RandomState(5)
+    out = []
+    for h, w in [(1, 1), (7, 9), (17, 33), (9, 200), (50, 21)]:
+        yy, xx = np.mgrid[0:h, 0:w]
+        smooth = np.stack(
+            [xx * 255 // max(w - 1, 1), yy * 255 // max(h - 1, 1),
+             (xx + yy) * 127 // max(h + w - 2, 1)],
+            axis=-1,
+        ).astype(np.uint8)
+        noise = rng.randint(0, 256, (h, w, 3)).astype(np.uint8)
+        for q in (1, 10, 50, 75, 95, 100):
+            out.append(jpeg_encode(noise, q))
+            out.append(jpeg_encode(smooth, q))
+    return out
+
+
+def decode_digest(blobs: list[bytes]) -> str:
+    from ghcrawler_spark.functions.jpeg import jpeg_decode
+
+    d = hashlib.sha256()
+    for b in blobs:
+        px = jpeg_decode(b)
+        d.update(np.asarray(px.shape, dtype=np.int64).tobytes())
+        d.update(px.tobytes())
+    return d.hexdigest()
+
+
+def test_jpeg_decode_pinned_fixture_corpus():
+    blobs = fixture_jpegs()
+    assert len(blobs) == 4
+    assert decode_digest(blobs) == FIXTURE_JPEG_SHA256
+
+
+def test_jpeg_decode_pinned_size_quality_matrix():
+    assert decode_digest(matrix_jpegs()) == MATRIX_JPEG_SHA256
+
+
+def _segments(enc: bytes) -> tuple[list[tuple[int, bytes]], bytes]:
+    """Split a JFIF stream into its marker segments up to SOS and the
+    entropy-coded scan (without EOI)."""
+    pos, segs = 2, []
+    while True:
+        marker = enc[pos + 1]
+        (length,) = struct.unpack(">H", enc[pos + 2 : pos + 4])
+        segs.append((marker, enc[pos + 4 : pos + 2 + length]))
+        pos += 2 + length
+        if marker == 0xDA:
+            return segs, enc[pos:-2]
+
+
+def _assemble(segs: list[tuple[int, bytes]], scan: bytes) -> bytes:
+    out = bytearray(b"\xff\xd8")
+    for marker, payload in segs:
+        out += struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
+    return bytes(out + scan + b"\xff\xd9")
+
+
+def _patched(enc: bytes, marker: int, fn) -> bytes:
+    segs, scan = _segments(enc)
+    return _assemble([(m, fn(p) if m == marker else p) for m, p in segs], scan)
+
+
+def _flat_scan(n_mcus: int) -> bytes:
+    """Scan of n all-zero MCUs (DC size 0 + EOB per block): 14 bits each, so
+    four MCUs end byte-aligned with no padding."""
+    from ghcrawler_spark.functions import jpeg as J
+
+    dc = [J._huff_codes(J.DC_LUM_BITS, J.DC_LUM_VALS)[0],
+          J._huff_codes(J.DC_CHR_BITS, J.DC_CHR_VALS)[0]]
+    eob = [J._huff_codes(J.AC_LUM_BITS, J.AC_LUM_VALS)[0x00],
+           J._huff_codes(J.AC_CHR_BITS, J.AC_CHR_VALS)[0x00]]
+    bw = J._BitWriter()
+    for _ in range(n_mcus):
+        for t in (0, 1, 1):
+            bw.write(*dc[t])
+            bw.write(*eob[t])
+    bw.flush()
+    return bytes(bw.out)
+
+
+def _gray_jpeg(w: int, scan: bytes) -> bytes:
+    from ghcrawler_spark.functions.jpeg import jpeg_encode
+
+    segs, _ = _segments(jpeg_encode(np.zeros((8, w, 3), dtype=np.uint8), 50))
+    return _assemble(segs, scan)
+
+
+def _jpeg_guard_sample() -> bytes:
+    from ghcrawler_spark.functions.jpeg import jpeg_encode
+
+    return jpeg_encode(_pixels(seed=1, h=8, w=16), 50)
+
+
+def test_jpeg_crafted_flat_scan_decodes():
+    """Positive control for the crafted-scan guards below."""
+    from ghcrawler_spark.functions.jpeg import jpeg_decode
+
+    scan = _flat_scan(4)
+    assert len(scan) == 7
+    assert (jpeg_decode(_gray_jpeg(32, scan)) == 128).all()
+
+
+def test_jpeg_truncated_mid_code_raises():
+    from ghcrawler_spark.functions.jpeg import jpeg_decode
+
+    segs, scan = _segments(_jpeg_guard_sample())
+    for cut in range(len(scan)):
+        with pytest.raises(ValueError, match="truncated"):
+            jpeg_decode(_assemble(segs, scan[:cut]))
+
+
+def test_jpeg_truncated_at_block_boundary_raises():
+    """Four whole MCUs, byte-aligned, where the frame needs five."""
+    from ghcrawler_spark.functions.jpeg import jpeg_decode
+
+    with pytest.raises(ValueError, match="truncated"):
+        jpeg_decode(_gray_jpeg(40, _flat_scan(4)))
+
+
+def test_jpeg_marker_inside_scan_raises():
+    from ghcrawler_spark.functions.jpeg import jpeg_decode
+
+    segs, scan = _segments(_jpeg_guard_sample())
+    mid = len(scan) // 2
+    with pytest.raises(ValueError, match="marker"):
+        jpeg_decode(_assemble(segs, scan[:mid] + b"\xff\xd0" + scan[mid:]))
+
+
+def test_jpeg_invalid_huffman_code_raises():
+    """Sixteen 1-bits are no code of the Annex-K luminance DC table."""
+    from ghcrawler_spark.functions.jpeg import jpeg_decode
+
+    with pytest.raises(ValueError, match="invalid Huffman code"):
+        jpeg_decode(_gray_jpeg(8, b"\xff\x00" * 4))
+
+
+@pytest.mark.parametrize("rs", [0x31, 0xF1])  # short code / code + bits > 16
+def test_jpeg_ac_index_overflow_raises(rs):
+    from ghcrawler_spark.functions import jpeg as J
+
+    bw = J._BitWriter()
+    bw.write(*J._huff_codes(J.DC_LUM_BITS, J.DC_LUM_VALS)[0])
+    code, length = J._huff_codes(J.AC_LUM_BITS, J.AC_LUM_VALS)[rs]
+    for _ in range(16):
+        bw.write(code, length)
+        bw.write(1, 1)
+    bw.flush()
+    with pytest.raises(ValueError, match="AC index overflow"):
+        J.jpeg_decode(_gray_jpeg(8, bytes(bw.out)))
+
+
+@pytest.mark.parametrize("marker,reason", [(0xC4, "Huffman"), (0xDB, "quant")])
+def test_jpeg_missing_table_raises(marker, reason):
+    from ghcrawler_spark.functions.jpeg import jpeg_decode
+
+    segs, scan = _segments(_jpeg_guard_sample())
+    with pytest.raises(ValueError, match=f"missing {reason}"):
+        jpeg_decode(_assemble([(m, p) for m, p in segs if m != marker], scan))
+
+
+def test_jpeg_restart_interval_raises():
+    from ghcrawler_spark.functions.jpeg import jpeg_decode
+
+    segs, scan = _segments(_jpeg_guard_sample())
+    segs.insert(len(segs) - 1, (0xDD, b"\x00\x01"))
+    with pytest.raises(ValueError, match="restart"):
+        jpeg_decode(_assemble(segs, scan))
+
+
+def test_jpeg_chroma_subsampling_raises():
+    from ghcrawler_spark.functions.jpeg import jpeg_decode
+
+    enc = _patched(_jpeg_guard_sample(), 0xC0, lambda p: p[:7] + b"\x22" + p[8:])
+    with pytest.raises(ValueError, match="subsampling"):
+        jpeg_decode(enc)
+
+
+def test_jpeg_16bit_quant_table_raises():
+    from ghcrawler_spark.functions.jpeg import jpeg_decode
+
+    enc = _patched(_jpeg_guard_sample(), 0xDB, lambda p: bytes([0x10 | p[0]]) + p[1:])
+    with pytest.raises(ValueError, match="16-bit"):
+        jpeg_decode(enc)
+
+
+def test_jpeg_partial_scan_raises():
+    """One scan must carry every frame component (no progressive-style
+    component-by-component scans)."""
+    from ghcrawler_spark.functions.jpeg import jpeg_decode
+
+    enc = _patched(_jpeg_guard_sample(), 0xDA, lambda p: b"\x01" + p[1:3] + p[7:])
+    with pytest.raises(ValueError, match="interleaved scan"):
+        jpeg_decode(enc)
+
+
+def test_jpeg_dc_value_out_of_range_raises():
+    """A DC magnitude category above 16 cannot come from an 8-bit scan."""
+    from ghcrawler_spark.functions.jpeg import jpeg_decode
+
+    def dc_lum_17(p: bytes) -> bytes:
+        # first table of the first DHT is the luminance DC one: last value → 17
+        return p[:28] + b"\x11" + p[29:] if p[0] == 0x00 else p
+
+    enc = _patched(_jpeg_guard_sample(), 0xC4, dc_lum_17)
+    with pytest.raises(ValueError, match="DC Huffman value"):
+        jpeg_decode(enc)
