@@ -38,6 +38,9 @@ entries without the original keys.
 
 from __future__ import annotations
 
+import math
+from typing import Callable
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -55,7 +58,7 @@ from ghcrawler_spark.operators.seen import _splitmix64
 
 SLOTS = 4  # slots per bucket (standard (2,4)-cuckoo: ~95% max load)
 MAX_KICKS = 500  # eviction chain bound before declaring the shard full
-DESIGN_LOAD = 0.5  # sizing target; overflowed() fires at 1.6x = 0.8 load
+DESIGN_LOAD = 0.5  # sizing target; the resize fires at HEADROOM 1.6x = 0.8 load
 
 CUCKOO_SCHEMA = StructType(
     [
@@ -97,8 +100,8 @@ def cuckoo_buckets(expected_keys: int) -> int:
 
 class CuckooShardOverflow(ValueError):
     """A shard's fingerprint table could not place every key (load ≈ 1.0).
-    The engine catches this and falls through to the amortized full-rebuild
-    branch (round_engine resize) instead of aborting the round — a skewed
+    ``CuckooShardTable.live_total`` catches it so the engine falls through
+    to the amortized full rebuild instead of aborting the round — a skewed
     shard may saturate before the GLOBAL total-keys trigger fires."""
 
 
@@ -322,13 +325,20 @@ class CuckooShardTable:
     """Executor-resident sharded cuckoo filter — deletable URL-seen set.
 
     API-compatible with BloomShardTable (build/empty/merged/probe/
-    overflowed/total_keys/as_rows_df/from_rows_df/destroy) so
-    ``filter_unseen`` and the engine's seen path take either; adds
-    ``deleted`` (the operation Bloom cannot express). All state lives in a
-    CUCKOO_SCHEMA DataFrame; probe/merge/delete are cogroups on the shard
-    id — no driver collect, no all-shards broadcast, one shard's bytes per
-    task (the same 10^10-key discipline as the Bloom table).
+    manifest/live_total/HEADROOM/rerooted/known_empty/as_rows_df/
+    from_rows_df/destroy) so ``filter_unseen`` and the engine's seen path
+    take either; adds ``deleted`` (the operation Bloom cannot express).
+    All state lives in a CUCKOO_SCHEMA DataFrame; probe/merge/delete are
+    cogroups on the shard id — no driver collect, no all-shards broadcast,
+    one shard's bytes per task (the same 10^10-key discipline as the Bloom
+    table).
     """
+
+    KIND = "cuckoo"
+    # resize at 0.8 slot load (DESIGN_LOAD 0.5 x 1.6): inserts start failing
+    # near ~0.95 load, so unlike Bloom's graceful FPR decay the resize must
+    # land before the table saturates
+    HEADROOM = 1.6
 
     def __init__(
         self,
@@ -383,6 +393,24 @@ class CuckooShardTable:
 
     def as_rows_df(self, spark: SparkSession) -> DataFrame:
         return self.shards_df
+
+    def manifest(self, total_keys: int = 0) -> dict:
+        return {
+            "kind": self.KIND,
+            "n_buckets": self.n_buckets,
+            "capacity_per_shard": self.capacity_per_shard,
+            "num_shards": self.num_shards,
+            "total_keys": total_keys,
+        }
+
+    def rerooted(self, read_rows: Callable[[], DataFrame]) -> "CuckooShardTable":
+        """Lineage truncation, as ``BloomShardTable.rerooted``."""
+        fresh = CuckooShardTable.from_rows_df(
+            read_rows(), self.num_shards, self.n_buckets,
+            self.capacity_per_shard,
+        )
+        self.destroy()
+        return fresh
 
     # -- updates ------------------------------------------------------
     def _apply_keys(self, keys_df: DataFrame, key_col: str, op: str) -> DataFrame:
@@ -464,14 +492,9 @@ class CuckooShardTable:
         )
 
     # -- inspection ---------------------------------------------------
-    def overflowed(self, headroom: float = 1.6) -> bool:
+    def overflowed(self, headroom: float = HEADROOM) -> bool:
         """True when any shard's live keys exceed ``headroom``× the design
-        capacity. The default 1.6 (= 0.8 slot load at the DESIGN_LOAD 0.5
-        sizing) fires BEFORE eviction chains start failing at ~0.95 load —
-        a 2.0 default would be 100% occupancy, unreachable because inserts
-        raise CuckooShardOverflow first, so a caller polling this method
-        per the resize contract would only ever see the exception path
-        (the engine's own trigger uses the same 1.6 factor)."""
+        capacity (default HEADROOM, the engine's own resize trigger)."""
         if self.capacity_per_shard <= 0:
             return False
         row = self.shards_df.agg(F.max("n_keys").alias("mx")).first()
@@ -481,6 +504,19 @@ class CuckooShardTable:
     def total_keys(self) -> int:
         row = self.shards_df.agg(F.sum("n_keys").alias("s")).first()
         return int(row["s"]) if row and row["s"] is not None else 0
+
+    def live_total(self, prev_total: int, n_new: int) -> float:
+        """EXACT live count (args unused): one job that also fills the
+        merged shard cache; set-semantics inserts keep recrawls from
+        inflating it. A skewed shard that saturates first raises
+        CuckooShardOverflow (wrapped by Spark): ``math.inf`` then trips the
+        amortized rebuild instead of aborting the round."""
+        try:
+            return self.total_keys()
+        except Exception as e:  # PythonException wraps the raise
+            if "over capacity" not in str(e):
+                raise
+            return math.inf
 
     def destroy(self) -> None:
         try:

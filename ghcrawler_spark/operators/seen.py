@@ -1,4 +1,4 @@
-"""Sharded Bloom-filter URL-seen set.
+"""Sharded Bloom-filter URL-seen set, and the seen-set decision.
 
 Replaces ghcrawler's two dedup structures — the Redis request tracker
 (providers/queuing/redisRequestTracker.js:17-53, TTL-tagged "is it already
@@ -8,8 +8,8 @@ queued?") and the storage etag probe (providers/fetcher/githubFetcher.js:28,
   1. keys are sharded by ``pmod(url_hash, num_shards)``;
   2. each shard's filter is built executor-side (``applyInPandas`` over the
      shard group — one numpy pass, no driver collect of keys);
-  3. candidate URLs probe the broadcast filter bytes in a vectorized Arrow
-     UDF; only probe-positives proceed to the exact anti-join confirm.
+  3. candidate URLs probe the filter bytes in a vectorized Arrow UDF; only
+     probe-positives proceed to the exact anti-join confirm.
 
 Properties (tests/test_seen.py): NO false negatives (a seen URL always probes
 positive → never re-crawled twice after confirm), bounded false positives
@@ -18,16 +18,21 @@ positive → never re-crawled twice after confirm), bounded false positives
 Two probe shapes, same math (pinned equal by tests/test_seen.py):
 
 - ``BloomShardSet`` — driver-held blobs, ONE broadcast of the whole shard
-  dict, probe in a scalar Arrow UDF. Fine up to a few GB of filter; at the
-  full 10^10-URL scale (1% FPR ≈ 9.6 bits/key ≈ 12 GB) the all-shards
-  broadcast is a hard stop.
-- ``BloomShardTable`` — the 10^10 shape and the engine DEFAULT: blobs live
+  dict, probe in a scalar Arrow UDF. Chosen while the whole filter fits
+  under ``BROADCAST_MAX_BYTES`` (64 MiB, ~56M keys of capacity at 1% FPR),
+  so it is the shape every benchmark crawl runs. At the full 10^10-URL
+  scale (~12 GB of filter) the all-shards broadcast is a hard stop.
+- ``BloomShardTable`` — the 10^10 shape, chosen above that size: blobs live
   in a DataFrame (SHARD_SCHEMA), never on the driver and never broadcast as
   a whole. Probing is SHARD-LOCAL: candidates are grouped by
   ``pmod(url_hash, num_shards)`` and COGROUPED with the one matching shard
   row, so each task holds exactly one shard's bytes. Incremental merge
   (bitwise OR of same-sized delta filters) is likewise a cogroup — Bloom
   state never passes through the driver at all.
+
+:func:`empty`, :func:`load` and :func:`build` pick the kind (these two, or
+the deletable ``cuckoo.CuckooShardTable``), the shape and the shard count;
+the three classes share one surface, so the engine never asks which it has.
 
 The filter math is the standard double-hashing Bloom construction
 (pos_i = h1 + i*h2 mod m) over splitmix64-mixed key halves.
@@ -37,6 +42,7 @@ from __future__ import annotations
 
 import math
 from dataclasses import dataclass
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -60,6 +66,16 @@ SHARD_SCHEMA = StructType(
         StructField("k_funcs", IntegerType(), False),
     ]
 )
+
+# Seen-set sizing (tests monkeypatch these to force a shape or a resize).
+# A Bloom filter bigger than this in total (num_shards x m_bits/8) is probed
+# shard-local instead of broadcast; it reads manifest sizing only, so replay
+# makes the same choice.
+BROADCAST_MAX_BYTES = 64 << 20
+# A full build grows the SHARD COUNT so one shard's blob stays under this
+# (10^10 keys at 1% FPR ≈ 12 GB → ~188 shards of ≤64 MB, not 16 of 750 MB).
+SHARD_MAX_BYTES = 64 << 20
+SEED_EXPECTED_FLOOR = 4096  # per-shard capacity floor of a new crawl
 
 _GOLDEN = np.uint64(0x9E3779B97F4A7C15)
 
@@ -144,8 +160,33 @@ def _build_shard_blobs(
     }
 
 
+class _BloomCommon:
+    """Manifest block and live-count rule shared by both Bloom shapes."""
+
+    KIND = "bloom"
+    # resize once inserts pass 2x design capacity: Bloom degrades gracefully
+    # (FPR decay), so a late rebuild costs probe selectivity, never output
+    HEADROOM = 2.0
+
+    def manifest(self, total_keys: int = 0) -> dict:
+        return {
+            "m_bits": self.m_bits,
+            "k_funcs": self.k_funcs,
+            "capacity_per_shard": self.capacity_per_shard,
+            "num_shards": self.num_shards,
+            # running insert count (upper bound: re-inserts counted) — the
+            # overflow check is manifest arithmetic, never a per-round agg job
+            "total_keys": total_keys,
+        }
+
+    def live_total(self, prev_total: int, n_new: int) -> int:
+        """Manifest arithmetic, no Spark job (md5-hashed keys shard
+        uniformly; re-inserts over-count, which only rebuilds early)."""
+        return prev_total + n_new
+
+
 @dataclass
-class BloomShardSet:
+class BloomShardSet(_BloomCommon):
     """Broadcastable handle: shard_id → (filter_bytes, m, k).
 
     One Spark broadcast is created lazily on first probe and REUSED for every
@@ -234,13 +275,14 @@ class BloomShardSet:
     def total_keys(self) -> int:
         return sum((self.n_keys or {}).values())
 
-    def overflowed(self, headroom: float = 2.0) -> bool:
-        """True when inserts exceed the design capacity by ``headroom``×
-        (FPR has decayed past spec → rebuild bigger). Counts are upper
-        bounds (re-inserts counted), so this triggers early, never late."""
-        if not self.shards or self.capacity_per_shard <= 0:
-            return False
-        return max((self.n_keys or {}).values(), default=0) > headroom * self.capacity_per_shard
+    @property
+    def known_empty(self) -> bool:
+        return not self.shards
+
+    def rerooted(self, read_rows: Callable[[], DataFrame]) -> "BloomShardSet":
+        """Driver-held blobs have no lineage to truncate; ``read_rows`` is
+        not called (a parquet read costs a schema-inference job)."""
+        return self
 
     def to_rows(self) -> list[tuple]:
         """Rows in SHARD_SCHEMA order for persistence in a snapshot store."""
@@ -352,7 +394,7 @@ def probe_sharded(
     )
 
 
-class BloomShardTable:
+class BloomShardTable(_BloomCommon):
     """Executor-resident sharded Bloom set — the 10^10-key shape.
 
     The shard blobs live in a SHARD_SCHEMA DataFrame; no driver collect, no
@@ -459,14 +501,16 @@ class BloomShardTable:
             self.capacity_per_shard,
         )
 
-    def overflowed(self, headroom: float = 2.0) -> bool:
-        """Max per-shard inserts vs design capacity — a num_shards-row agg
-        (upper bound: re-inserts counted, so it triggers early, never late)."""
-        if self.capacity_per_shard <= 0:
-            return False
-        row = self.shards_df.agg(F.max("n_keys").alias("mx")).first()
-        mx = row["mx"] if row and row["mx"] is not None else 0
-        return mx > headroom * self.capacity_per_shard
+    def rerooted(self, read_rows: Callable[[], DataFrame]) -> "BloomShardTable":
+        """This set on its just-persisted rows, its own cache released:
+        without it each round's merged plan nests the previous round's
+        cogroup (+ candidate pipeline) and analysis cost grows unbounded."""
+        fresh = BloomShardTable.from_rows_df(
+            read_rows(), self.num_shards, self.m_bits, self.k_funcs,
+            self.capacity_per_shard,
+        )
+        self.destroy()
+        return fresh
 
     def total_keys(self) -> int:
         row = self.shards_df.agg(F.sum("n_keys").alias("s")).first()
@@ -498,7 +542,7 @@ class BloomShardTable:
 def filter_unseen(
     candidates: DataFrame,
     seen_keys: DataFrame,
-    bloom: "BloomShardSet | BloomShardTable | None",
+    bloom: "BloomShardSet | BloomShardTable | CuckooShardTable | None",
     key_col: str = "url_hash",
     persisted: list | None = None,
     confirm_broadcast: bool | None = None,
@@ -506,8 +550,8 @@ def filter_unseen(
 ) -> DataFrame:
     """Bloom-pushdown unseen filter: definite-unseen rows pass for free; only
     probe-positives (true dups + ~fpr false positives) hit the exact
-    confirm. With bloom=None degrades to the plain anti-join. Takes either
-    probe shape (broadcast BloomShardSet or shard-local BloomShardTable).
+    confirm. With bloom=None degrades to the plain anti-join. Takes any of
+    the three seen-set classes.
 
     The exact confirm never exchanges the seen side: the suspect key set is
     bounded by the candidate batch (round_capacity x fan-out) while the seen
@@ -519,13 +563,9 @@ def filter_unseen(
     forces the mode (callers that already know the batch size, e.g. the
     engine, skip the sizing count); None counts the cached suspects first.
     """
-    if (
-        bloom is None
-        or (isinstance(bloom, BloomShardSet) and not bloom.shards)
-        # fresh shard table (Bloom or cuckoo empty()): the cogroup probe
-        # would compute all-False — skip straight to the plain anti-join
-        or getattr(bloom, "known_empty", False)
-    ):
+    # an empty set's probe would compute all-False — skip straight to the
+    # plain anti-join
+    if bloom is None or bloom.known_empty:
         if confirm_broadcast:  # None = no sizing info here → shuffle path
             hits = (
                 seen_keys.select(key_col)
@@ -574,3 +614,86 @@ def filter_unseen(
             seen_keys.select(key_col), on=key_col, how="left_anti"
         )
     return definitely_new.unionByName(confirmed_new)
+
+
+# -- the seen-set decision: kind, shape and shard count ----------------------
+
+
+def _bloom_class(m_bits: int, num_shards: int):
+    """Broadcast up to BROADCAST_MAX_BYTES, shard-local beyond."""
+    if num_shards * (m_bits // 8) > BROADCAST_MAX_BYTES:
+        return BloomShardTable
+    return BloomShardSet
+
+
+def empty(
+    spark: SparkSession, kind: str, n_seeded: int, num_shards: int, fpr: float
+):
+    """A new crawl's seen set of ``kind`` 'bloom' or 'cuckoo', sized for
+    max(SEED_EXPECTED_FLOOR, 2 x the seeds per shard)."""
+    expected = max(SEED_EXPECTED_FLOOR, 2 * n_seeded // max(num_shards, 1))
+    if kind == "cuckoo":
+        from ghcrawler_spark.operators.cuckoo import CuckooShardTable
+
+        return CuckooShardTable.empty(
+            spark, num_shards=num_shards, expected_per_shard=expected
+        )
+    m, _ = optimal_params(expected, fpr)
+    if _bloom_class(m, num_shards) is BloomShardTable:
+        return BloomShardTable.empty(spark, num_shards, expected, fpr)
+    return BloomShardSet.empty(num_shards, expected, fpr)
+
+
+def load(info: dict, rows_df: DataFrame):
+    """The set a manifest ``"bloom"`` block and its persisted shard rows
+    describe; a block without ``"kind"`` is Bloom."""
+    if info.get("kind") == "cuckoo":
+        from ghcrawler_spark.operators.cuckoo import CuckooShardTable
+
+        return CuckooShardTable.from_rows_df(
+            rows_df,
+            num_shards=info["num_shards"],
+            n_buckets=info["n_buckets"],
+            capacity_per_shard=info["capacity_per_shard"],
+        )
+    params = (
+        info["num_shards"], info["m_bits"], info["k_funcs"],
+        info["capacity_per_shard"],
+    )
+    if _bloom_class(info["m_bits"], info["num_shards"]) is BloomShardTable:
+        return BloomShardTable.from_rows_df(rows_df, *params)
+    return BloomShardSet.from_rows(rows_df.collect(), *params)
+
+
+def _shards_for(kind: str, total_keys: int, min_shards: int, fpr: float) -> int:
+    """Shards (at least ``min_shards``) keeping one shard's filter or
+    fingerprint table for ``total_keys`` keys ≤ SHARD_MAX_BYTES."""
+    if kind == "cuckoo":
+        from ghcrawler_spark.operators.cuckoo import SLOTS, cuckoo_buckets
+
+        total_bytes = cuckoo_buckets(max(64, total_keys)) * SLOTS * 2
+    else:
+        total_bytes = optimal_params(max(64, total_keys), fpr)[0] // 8
+    return max(min_shards, -(-total_bytes // max(1, SHARD_MAX_BYTES)))
+
+
+def build(
+    kind: str, keys_df: DataFrame, total_keys: int, min_shards: int, fpr: float
+):
+    """A ``kind`` seen set of ``keys_df`` sized for ``total_keys`` keys —
+    the legacy-store rebuild and the overflow resize. Shard count and
+    Bloom shape follow the new size."""
+    num_shards = _shards_for(kind, total_keys, min_shards, fpr)
+    # optimal_params floors m_bits itself, so the per-shard key budget may
+    # legitimately drop below 64 when the byte cap forces many small shards
+    per_shard = max(1, total_keys // num_shards)
+    if kind == "cuckoo":
+        from ghcrawler_spark.operators.cuckoo import CuckooShardTable
+
+        return CuckooShardTable.build(
+            keys_df, num_shards=num_shards, expected_per_shard=per_shard
+        )
+    m, _ = optimal_params(per_shard, fpr)
+    return _bloom_class(m, num_shards).build(
+        keys_df, num_shards=num_shards, fpr=fpr, expected_per_shard=per_shard
+    )

@@ -64,17 +64,8 @@ from ghcrawler_spark.operators.frontier_ops import (
     trait_cap,
     weighted_rotation_order_scalable,
 )
-from ghcrawler_spark.operators.seen import (
-    BloomShardSet,
-    BloomShardTable,
-    filter_unseen,
-    optimal_params,
-)
-from ghcrawler_spark.operators.cuckoo import (
-    SLOTS as CUCKOO_SLOTS,
-    CuckooShardTable,
-    cuckoo_buckets,
-)
+from ghcrawler_spark.operators import seen as seen_set
+from ghcrawler_spark.operators.seen import filter_unseen
 from ghcrawler_spark.plans.policy import (
     FETCH_POLICIES,
     FRESHNESS_POLICIES,
@@ -161,38 +152,16 @@ class CrawlConfig:
     scenario_maps: dict | None = None
     inject_failures: bool = True
     validate_images: bool = False  # decode+PSNR audit columns on docs
-    use_bloom: bool = True
+    # seen set: seed-time shard count (rebuilds grow it) and Bloom FPR
     bloom_shards: int = 16
     bloom_fpr: float = 0.01
-    # Probe strategy — the same size-adaptive decision Catalyst makes for
-    # broadcast vs shuffle joins:
-    #   'auto' (default): broadcast the blobs while the whole filter fits
-    #     under bloom_broadcast_max_bytes; beyond that (the 10^10-key
-    #     regime, ~12 GB at 1% FPR) switch to SHARD-LOCAL probing — blobs
-    #     live in a SHARD_SCHEMA DataFrame and candidates cogroup with
-    #     exactly their one shard, no single-node copy of all shards
-    #     anywhere in the plan. The decision reads only manifest params
-    #     (m_bits × num_shards), so it is deterministic and replay-safe;
-    #     a growing crawl flips to shard-local at a filter rebuild.
-    #   'shard_local' / 'broadcast': force one shape (tests pin them equal).
-    bloom_mode: str = "auto"
-    bloom_broadcast_max_bytes: int = 64 << 20
-    # amortized-resize sizing: the rebuild grows the SHARD COUNT (not just
-    # per-shard bits) so one shard's filter blob never exceeds this — probe
-    # parallelism and per-task memory both track the key volume (10^10 keys
-    # at 1% FPR ≈ 12 GB of filter → ~188 shards of ≤64 MB, not 16 shards of
-    # 750 MB). The new count lands in the manifest, so resume/replay
-    # re-derives shard assignment deterministically.
-    bloom_shard_max_bytes: int = 64 << 20
-    # test hook: override the max(4096, …) seed-time floor so an overflow →
-    # resize can be forced on a small fixture (None = production floor)
-    bloom_seed_expected_per_shard: int | None = None
     # seen-set structure: 'bloom' (default — OR-mergeable bit filters,
-    # broadcast or shard-local per bloom_mode) or 'cuckoo' (displaceable
-    # 16-bit fingerprint tables, operators/cuckoo.py — supports DELETE, the
-    # reference tracker's untag, redisRequestTracker.js:47-53; always
-    # shard-local). Fixed for the life of a store: the persisted shard
-    # schema differs, so a resumed run keeps the manifest's kind.
+    # broadcast or shard-local by size, operators/seen.py) or 'cuckoo'
+    # (displaceable 16-bit fingerprint tables, operators/cuckoo.py —
+    # supports DELETE, the reference tracker's untag,
+    # redisRequestTracker.js:47-53; always shard-local). Fixed for the life
+    # of a store: the persisted shard schema differs, so a resumed run
+    # keeps the manifest's kind.
     seen_filter: str = "bloom"
     # merge-on-read state: rewrite the frontier/seen bases every K rounds;
     # between compactions a round writes only its own adds/removes deltas
@@ -381,26 +350,6 @@ def _run_writes(writes: list) -> None:
     """Run independent write jobs concurrently (wall = slowest, not sum)."""
     with ThreadPoolExecutor(max_workers=min(8, max(1, len(writes)))) as pool:
         list(pool.map(lambda w: w(), writes))
-
-
-def _bloom_manifest(bloom, total_keys: int = 0) -> dict:
-    if isinstance(bloom, CuckooShardTable):
-        return {
-            "kind": "cuckoo",
-            "n_buckets": bloom.n_buckets,
-            "capacity_per_shard": bloom.capacity_per_shard,
-            "num_shards": bloom.num_shards,
-            "total_keys": total_keys,
-        }
-    return {
-        "m_bits": bloom.m_bits,
-        "k_funcs": bloom.k_funcs,
-        "capacity_per_shard": bloom.capacity_per_shard,
-        "num_shards": bloom.num_shards,
-        # running insert count (upper bound: re-inserts counted) — the
-        # overflow check is manifest arithmetic, never a per-round agg job
-        "total_keys": total_keys,
-    }
 
 
 class CrawlEngine:
@@ -804,52 +753,27 @@ class CrawlEngine:
         list API at 10000 the same way)."""
         return self.current_deadletter().limit(limit).collect()
 
-    def _bloom_shard_local(self, m_bits: int, num_shards: int | None = None) -> bool:
-        """Resolve the probe strategy for a filter of this sizing."""
-        if self.cfg.seen_filter == "cuckoo":
-            return True  # fingerprint tables are always executor-resident
-        if self.cfg.bloom_mode == "auto":
-            shards = num_shards if num_shards is not None else self.cfg.bloom_shards
-            total_bytes = shards * (m_bits // 8)
-            return total_bytes > self.cfg.bloom_broadcast_max_bytes
-        return self.cfg.bloom_mode == "shard_local"
-
     def _write_bloom(self, version: int, bloom) -> None:
         """Persist shard blobs (num_shards rows) so a resumed run reloads
-        them instead of rebuilding from the full seen set. In shard_local
-        mode the rows never pass through the driver — the executor-side
+        them instead of rebuilding from the full seen set. For a shard-local
+        set the rows never pass through the driver — the executor-side
         table is written directly."""
         self.store.write_append(version, "bloom", bloom.as_rows_df(self.spark))
 
     def _load_bloom(self, version: int, manifest: dict, seen: DataFrame):
         """Cached set when this engine committed ``version``; else the
-        persisted blobs; else (pre-incremental store) a full rebuild.
-        Returns a BloomShardTable (shard_local, default) or BloomShardSet
-        (broadcast) per cfg.bloom_mode."""
+        persisted blobs; else (pre-incremental store) a full rebuild."""
         if self._bloom is not None and self._bloom_version == version:
             return self._bloom
         info = manifest.get("bloom")
         if info is not None:
             try:
-                rows_df = self.store.read_appends(
-                    self.spark, "bloom", version, from_version=version
+                return seen_set.load(
+                    info,
+                    self.store.read_appends(
+                        self.spark, "bloom", version, from_version=version
+                    ),
                 )
-                if info.get("kind") == "cuckoo":
-                    return CuckooShardTable.from_rows_df(
-                        rows_df,
-                        num_shards=info["num_shards"],
-                        n_buckets=info["n_buckets"],
-                        capacity_per_shard=info["capacity_per_shard"],
-                    )
-                params = dict(
-                    num_shards=info["num_shards"],
-                    m_bits=info["m_bits"],
-                    k_funcs=info["k_funcs"],
-                    capacity_per_shard=info["capacity_per_shard"],
-                )
-                if self._bloom_shard_local(info["m_bits"], info["num_shards"]):
-                    return BloomShardTable.from_rows_df(rows_df, **params)
-                return BloomShardSet.from_rows(rows_df.collect(), **params)
             except FileNotFoundError:
                 pass
         # legacy (pre-incremental) store: full rebuild from the seen set.
@@ -857,49 +781,10 @@ class CrawlEngine:
         # resolve a multi-GB filter to the broadcast shape and pull every
         # blob through the driver, the exact failure shard-local mode exists
         # to avoid. The count is one job on a rare (resume-of-old-store) path.
-        n_seen = seen.count()
-        if self.cfg.seen_filter == "cuckoo":
-            num_shards = self._cuckoo_shards_for(n_seen)
-            return CuckooShardTable.build(
-                seen.select("url_hash"),
-                num_shards=num_shards,
-                expected_per_shard=max(64, n_seen // num_shards + 1),
-            )
-        num_shards = self._bloom_shards_for(n_seen)
-        expected = max(64, n_seen // num_shards + 1)
-        m_est, _ = optimal_params(expected, self.cfg.bloom_fpr)
-        cls = (
-            BloomShardTable
-            if self._bloom_shard_local(m_est, num_shards)
-            else BloomShardSet
+        return seen_set.build(
+            self.cfg.seen_filter, seen.select("url_hash"), seen.count(),
+            self.cfg.bloom_shards, self.cfg.bloom_fpr,
         )
-        return cls.build(
-            seen.select("url_hash"),
-            num_shards=num_shards,
-            fpr=self.cfg.bloom_fpr,
-            expected_per_shard=expected,
-        )
-
-    def _bloom_shards_for(self, total_keys: int) -> int:
-        """Shard count keeping one shard's filter bytes ≤ bloom_shard_max_bytes
-        at the target FPR (never below cfg.bloom_shards). This is what makes
-        the seen set genuinely 10^10-ready: probe parallelism and per-task
-        blob size both scale with key volume instead of freezing at the
-        seed-time count (the tracker's exactness contract holds at any
-        volume, redisRequestTracker.js:17-53)."""
-        m_total, _ = optimal_params(max(64, total_keys), self.cfg.bloom_fpr)
-        need = -(-(m_total // 8) // max(1, self.cfg.bloom_shard_max_bytes))
-        return max(self.cfg.bloom_shards, int(need))
-
-    def _cuckoo_shards_for(self, total_keys: int) -> int:
-        """Cuckoo analog of _bloom_shards_for: one shard's fingerprint table
-        (n_buckets × SLOTS × 2 bytes) stays ≤ bloom_shard_max_bytes, so probe
-        parallelism and per-task bytes track key volume (10^10 keys at 16
-        bits/key ≈ 40 GB of tables → ~640 shards of ≤64 MB)."""
-        nb_total = cuckoo_buckets(max(64, total_keys))
-        total_bytes = nb_total * CUCKOO_SLOTS * 2
-        need = -(-total_bytes // max(1, self.cfg.bloom_shard_max_bytes))
-        return max(self.cfg.bloom_shards, int(need))
 
     def _robots_allowed(self, df: DataFrame) -> tuple[DataFrame, DataFrame]:
         """Split rows into (allowed, denied) via broadcast semi/anti joins
@@ -1086,30 +971,10 @@ class CrawlEngine:
                 ),
             ]
         )
-        if self.cfg.bloom_seed_expected_per_shard is not None:
-            expected = self.cfg.bloom_seed_expected_per_shard
-        else:
-            expected = max(4096, 2 * n_seeded // max(self.cfg.bloom_shards, 1))
-        m_seed, _ = optimal_params(expected, self.cfg.bloom_fpr)
-        if self.cfg.seen_filter == "cuckoo":
-            bloom = CuckooShardTable.empty(
-                self.spark,
-                num_shards=self.cfg.bloom_shards,
-                expected_per_shard=expected,
-            )
-        elif self._bloom_shard_local(m_seed):
-            bloom = BloomShardTable.empty(
-                self.spark,
-                num_shards=self.cfg.bloom_shards,
-                expected_per_shard=expected,
-                fpr=self.cfg.bloom_fpr,
-            )
-        else:
-            bloom = BloomShardSet.empty(
-                num_shards=self.cfg.bloom_shards,
-                expected_per_shard=expected,
-                fpr=self.cfg.bloom_fpr,
-            )
+        bloom = seen_set.empty(
+            self.spark, self.cfg.seen_filter, n_seeded,
+            self.cfg.bloom_shards, self.cfg.bloom_fpr,
+        )
         self._write_bloom(0, bloom)
         seed_extras = {
             "next_seq": n_seeded,
@@ -1120,7 +985,7 @@ class CrawlEngine:
                 "frontier": 0, "seen": None, "deadletter": 0,
                 "stored": 0, "host_state": 0,
             },
-            "bloom": _bloom_manifest(bloom, 0),
+            "bloom": bloom.manifest(0),
             "ingested": {},
             "docs_total": 0,
         }
@@ -1816,109 +1681,49 @@ class CrawlEngine:
         persisted.append(uniq)
         n_cand = uniq.count()
         cand_broadcastable = n_cand <= cfg.dedup_broadcast_max
-        bloom = None
-        bloom_prev = None
-        if cfg.use_bloom:
-            # INCREMENTAL: Bloom union is bitwise OR — fold only this round's
-            # newly-seen keys into last round's persisted shard blobs instead
-            # of rescanning the whole seen set (O(batch), not O(total)).
-            # Filter contents only affect probe selectivity, never output
-            # (exact anti-join confirms), so a replay that merges onto a
-            # slightly different filter still commits identical state.
-            bloom_prev = self._load_bloom(version, manifest, seen)
-            bloom = bloom_prev.merged(newly_seen.select("url_hash"))
-            tr.mark("bloom merge")
-            overflow_forced = False
-            if isinstance(bloom, CuckooShardTable):
-                # EXACT live count: total_keys() materializes the merge
-                # cogroup once (filling the persisted shard cache the probe
-                # and blob write reuse) and sums per-shard n_keys, which
-                # _insert_batch keeps exact under set semantics — so
-                # recrawl-heavy (freshness 'always') rounds never inflate the
-                # counter into premature rebuilds. A SKEWED shard that
-                # saturates before the global trigger fires surfaces here as
-                # CuckooShardOverflow (from the executor, wrapped by Spark):
-                # treat it as the overflow signal and fall through to the
-                # same amortized rebuild instead of aborting the round.
-                try:
-                    bloom_total = bloom.total_keys()
-                except Exception as e:  # PythonException wraps the raise
-                    if "over capacity" not in str(e):
-                        raise
-                    bloom.destroy()
-                    bloom = bloom_prev  # rebuild reads seen_next below
-                    bloom_total = 0
-                    overflow_forced = True
-            else:
-                # Bloom: overflow (FPR decay) check by MANIFEST ARITHMETIC —
-                # newly-seen rows this round = selected − requeued, already
-                # counted by the outcome histogram; md5-hashed keys shard
-                # uniformly, so the total-vs-total-capacity test matches the
-                # per-shard one without an aggregation job per round (Bloom
-                # degrades gracefully, so an over-estimate only rebuilds a
-                # little early; cuckoo above needs the exact count)
-                prev_total = (manifest.get("bloom") or {}).get("total_keys", 0)
-                bloom_total = prev_total + max(0, n_selected - n_requeued)
-            # cuckoo fires earlier (1.6x = ~0.8 load): unlike Bloom's
-            # graceful FPR decay, cuckoo INSERTS start failing near full
-            # load, so the resize must land before the table saturates
-            _headroom = 1.6 if isinstance(bloom, CuckooShardTable) else 2.0
-            if overflow_forced or bloom_total > _headroom * bloom.capacity_per_shard * max(
-                1, bloom.num_shards
-            ):
-                # amortized resize: full rebuild at 4x TOTAL capacity
-                # (happens O(log n) times over a crawl, never per round).
-                # BOTH dimensions scale: the shard count grows so one
-                # shard's blob stays ≤ bloom_shard_max_bytes (probe
-                # parallelism tracks key volume; a cogroup task never holds
-                # a runaway blob), and per-shard bits cover the remainder.
-                # The probe strategy is re-resolved for the NEW sizing — a
-                # growing crawl flips broadcast → shard-local here. The new
-                # shard count lands in the manifest below, so resume/replay
-                # re-derives pmod(key, num_shards) deterministically.
-                total_expected = max(
-                    64, 4 * bloom.capacity_per_shard * max(1, bloom.num_shards)
-                )
-                if isinstance(bloom, CuckooShardTable):
-                    new_shards = max(
-                        self._cuckoo_shards_for(total_expected), bloom.num_shards
-                    )
-                    bloom = CuckooShardTable.build(
-                        seen_next.select("url_hash").distinct(),
-                        num_shards=new_shards,
-                        expected_per_shard=max(1, total_expected // new_shards),
-                    )
-                    bloom_total = bloom.total_keys()
-                    tr.mark("cuckoo resize rebuild")
-                else:
-                    new_shards = max(
-                        self._bloom_shards_for(total_expected), bloom.num_shards
-                    )
-                    # optimal_params floors m_bits itself, so the per-shard
-                    # key budget may legitimately drop below 64 when the
-                    # byte cap forces many small shards
-                    new_expected = max(1, total_expected // new_shards)
-                    m_new, _ = optimal_params(new_expected, cfg.bloom_fpr)
-                    cls = (
-                        BloomShardTable
-                        if self._bloom_shard_local(m_new, new_shards)
-                        else BloomShardSet
-                    )
-                    # DISTINCT keys: the seen log re-appends always-recrawled
-                    # urls; deduping here both trims the build and makes the
-                    # post-rebuild total_keys reset exact
-                    bloom = cls.build(
-                        seen_next.select("url_hash").distinct(),
-                        num_shards=new_shards,
-                        fpr=cfg.bloom_fpr,
-                        expected_per_shard=new_expected,
-                    )
-                    # reset the running insert counter from the rebuilt
-                    # filters (sum of per-shard inserts == distinct seen
-                    # keys): the pre-reset sum counts re-crawls, so carrying
-                    # it forward would re-trigger full rebuilds every few
-                    # rounds on recrawl-heavy (freshness 'always') crawls
-                    bloom_total = bloom.total_keys()
+        # INCREMENTAL: Bloom union is bitwise OR — fold only this round's
+        # newly-seen keys into last round's persisted shard blobs instead
+        # of rescanning the whole seen set (O(batch), not O(total)).
+        # Filter contents only affect probe selectivity, never output
+        # (exact anti-join confirms), so a replay that merges onto a
+        # slightly different filter still commits identical state.
+        bloom_prev = self._load_bloom(version, manifest, seen)
+        bloom = bloom_prev.merged(newly_seen.select("url_hash"))
+        tr.mark("bloom merge")
+        # newly-seen rows this round = selected − requeued, already counted
+        # by the outcome histogram
+        bloom_total = bloom.live_total(
+            (manifest.get("bloom") or {}).get("total_keys", 0),
+            max(0, n_selected - n_requeued),
+        )
+        if bloom_total > bloom.HEADROOM * bloom.capacity_per_shard * max(
+            1, bloom.num_shards
+        ):
+            # amortized resize: full rebuild at 4x TOTAL capacity (happens
+            # O(log n) times over a crawl, never per round). seen_set.build
+            # grows the shard count so one shard's blob stays ≤
+            # SHARD_MAX_BYTES and re-resolves the probe shape for the NEW
+            # sizing (a growing crawl flips broadcast → shard-local here).
+            # The new shard count lands in the manifest below, so
+            # resume/replay re-derives pmod(key, num_shards)
+            # deterministically. DISTINCT keys: the seen log re-appends
+            # always-recrawled urls; deduping trims the build and makes the
+            # total_keys reset below exact.
+            total_expected = max(
+                64, 4 * bloom.capacity_per_shard * max(1, bloom.num_shards)
+            )
+            min_shards = max(cfg.bloom_shards, bloom.num_shards)
+            bloom.destroy()
+            bloom = seen_set.build(
+                bloom.KIND, seen_next.select("url_hash").distinct(),
+                total_expected, min_shards, cfg.bloom_fpr,
+            )
+            # reset the running insert counter from the rebuilt filters
+            # (== distinct seen keys): the pre-reset sum counts re-crawls,
+            # so carrying it forward would re-trigger full rebuilds every
+            # few rounds on recrawl-heavy (freshness 'always') crawls
+            bloom_total = bloom.total_keys()
+            tr.mark("seen-set resize rebuild")
         # revisit rule (ROUND SPEC v2 step 7): freshness 'always' children
         # bypass the seen-set dedup (the page may have changed; history above
         # already bounds cycles) — everything else defers to the dedup cache
@@ -2361,8 +2166,7 @@ class CrawlEngine:
                 excl = ev_excl.unionByName(excl)
             writes.append(lambda: self.store.write_append(rnd, "excluded", excl))
         writes.append(lambda: self.store.write_append(rnd, "metrics", metrics_new))
-        if cfg.use_bloom:
-            writes.append(lambda: self._write_bloom(rnd, bloom))
+        writes.append(lambda: self._write_bloom(rnd, bloom))
         # the round's dozen-odd state writes are independent parquet jobs over
         # small frames — submit them concurrently so the wall cost is the
         # slowest write, not the sum of per-job scheduling latencies. (The
@@ -2413,50 +2217,26 @@ class CrawlEngine:
                 )
             elif baseline_prev is not None:
                 extras["cost_baseline"] = baseline_prev
-        if cfg.use_bloom:
-            extras["bloom"] = _bloom_manifest(bloom, bloom_total)
+        extras["bloom"] = bloom.manifest(bloom_total)
         self.store.commit(rnd, extras)
         _free_checkpoint(fetched)
         new_rows.unpersist()
         _free_checkpoint(fresh)
         for f in persisted:
             f.unpersist()
-        if cfg.use_bloom:
-            # cache the new set for next round; free superseded broadcasts
-            old = self._bloom
-            if isinstance(bloom, CuckooShardTable):
-                # same lineage truncation as the Bloom table below
-                fresh = CuckooShardTable.from_rows_df(
-                    self.store.read_appends(
-                        self.spark, "bloom", rnd, from_version=rnd
-                    ),
-                    num_shards=bloom.num_shards,
-                    n_buckets=bloom.n_buckets,
-                    capacity_per_shard=bloom.capacity_per_shard,
-                )
-                bloom.destroy()
-                bloom = fresh
-            elif isinstance(bloom, BloomShardTable):
-                # TRUNCATE LINEAGE: re-root the cached table on the parquet
-                # rows this round just persisted — otherwise each round's
-                # merged plan nests the previous round's cogroup (+ its whole
-                # candidate pipeline) and analysis cost grows without bound
-                fresh = BloomShardTable.from_rows_df(
-                    self.store.read_appends(
-                        self.spark, "bloom", rnd, from_version=rnd
-                    ),
-                    num_shards=bloom.num_shards,
-                    m_bits=bloom.m_bits,
-                    k_funcs=bloom.k_funcs,
-                    capacity_per_shard=bloom.capacity_per_shard,
-                )
-                bloom.destroy()
-                bloom = fresh
-            self._bloom, self._bloom_version = bloom, rnd
-            # old and bloom_prev are normally the same object; dedup by id
-            for stale in {id(s): s for s in (old, bloom_prev)}.values():
-                if stale is not None and stale is not bloom:
-                    stale.destroy()
+        # cache the new set for next round, re-rooted on the rows just
+        # persisted (lineage truncation); free superseded sets
+        old = self._bloom
+        bloom = bloom.rerooted(
+            lambda: self.store.read_appends(
+                self.spark, "bloom", rnd, from_version=rnd
+            )
+        )
+        self._bloom, self._bloom_version = bloom, rnd
+        # old and bloom_prev are normally the same object; dedup by id
+        for stale in {id(s): s for s in (old, bloom_prev)}.values():
+            if stale is not None and stale is not bloom:
+                stale.destroy()
         return True
 
     def _carry_extras(self, manifest: dict, **overrides) -> dict:
@@ -2479,9 +2259,11 @@ class CrawlEngine:
         extras.update(overrides)
         return extras
 
-    def _carry_bloom(self, manifest: dict, version: int, rnd: int, extras: dict):
-        """Blobs are per-version: an admin commit re-points the previous
-        version's filter at the new version (the seen set is untouched)."""
+    def _commit_admin(self, manifest: dict, rnd: int, extras: dict) -> None:
+        """Commit an ADMIN round. Blobs are per-version: the previous
+        version's filter is re-pointed at the new version (the seen set is
+        untouched), and the cached set follows it."""
+        version = manifest["current"]
         if "bloom" in manifest:
             self._write_bloom(
                 rnd,
@@ -2491,6 +2273,9 @@ class CrawlEngine:
                 ),
             )
             extras["bloom"] = manifest["bloom"]
+        self.store.commit(rnd, extras)
+        if self._bloom_version == version:
+            self._bloom_version = rnd
 
     def flush_tier(self, tier: str) -> int:
         """Admin queue surface (lib/crawlerService.js:75-88 flushQueue):
@@ -2509,10 +2294,7 @@ class CrawlEngine:
         extras = self._carry_extras(
             manifest, frontier_size=manifest["frontier_size"] - n
         )
-        self._carry_bloom(manifest, version, rnd, extras)
-        self.store.commit(rnd, extras)
-        if self._bloom_version == version:
-            self._bloom_version = rnd
+        self._commit_admin(manifest, rnd, extras)
         return n
 
     def peek_requests(
@@ -2540,10 +2322,7 @@ class CrawlEngine:
             extras = self._carry_extras(
                 manifest, frontier_size=manifest["frontier_size"] - len(rows)
             )
-            self._carry_bloom(manifest, version, rnd, extras)
-            self.store.commit(rnd, extras)
-            if self._bloom_version == version:
-                self._bloom_version = rnd
+            self._commit_admin(manifest, rnd, extras)
         return rows
 
     def describe_config(self) -> dict:
@@ -2577,16 +2356,12 @@ class CrawlEngine:
             self._preseed_cfg_patches.append(dict(patch))
         else:
             manifest = self.store.read_manifest()
-            version = manifest["current"]
             rnd = manifest["round"] + 1
             extras = self._carry_extras(manifest)
             extras["config_patches"] = list(
                 manifest.get("config_patches", [])
             ) + [dict(patch)]
-            self._carry_bloom(manifest, version, rnd, extras)
-            self.store.commit(rnd, extras)
-            if self._bloom_version == version:
-                self._bloom_version = rnd
+            self._commit_admin(manifest, rnd, extras)
         return self.describe_config()
 
     def queue_requests(self, requests: DataFrame, tier: str = "normal") -> dict:
@@ -2675,10 +2450,7 @@ class CrawlEngine:
             next_seq=next_seq + n_new,
             frontier_size=manifest["frontier_size"] + n_new,
         )
-        self._carry_bloom(manifest, version, rnd, extras)
-        self.store.commit(rnd, extras)
-        if self._bloom_version == version:
-            self._bloom_version = rnd
+        self._commit_admin(manifest, rnd, extras)
         for f in persisted:
             f.unpersist()
         return {
@@ -2742,10 +2514,7 @@ class CrawlEngine:
         new_bases = dict(bases)
         new_bases["deadletter"] = rnd
         extras = self._carry_extras(manifest, bases=new_bases)
-        self._carry_bloom(manifest, version, rnd, extras)
-        self.store.commit(rnd, extras)
-        if self._bloom_version == version:
-            self._bloom_version = rnd
+        self._commit_admin(manifest, rnd, extras)
         return n_before - n_keep
 
     def requeue_deadletters(self, url_filter: str | None = None) -> int:
@@ -2840,10 +2609,7 @@ class CrawlEngine:
             frontier_size=manifest["frontier_size"] + n_revived,
             bases=new_bases,
         )
-        self._carry_bloom(manifest, version, rnd, extras)
-        self.store.commit(rnd, extras)
-        if self._bloom_version == version:
-            self._bloom_version = rnd
+        self._commit_admin(manifest, rnd, extras)
         for f in persisted:
             f.unpersist()
         return n_revived

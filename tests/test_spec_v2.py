@@ -53,11 +53,9 @@ def _build(spark, tmp_path, corpus, links, seeds, cfg_kw):
     sim_links = {k: sorted(v) for k, v in links.items()}
     sim = ReferenceSimulator(dict(corpus), sim_links, SimConfig(**{
         k: v for k, v in cfg_kw.items()
-        if k not in ("use_bloom", "bloom_shards", "bloom_fpr", "compact_every",
+        if k not in ("bloom_shards", "bloom_fpr", "compact_every",
                      "validate_images", "ingest_dir", "politeness_salt",
-                     "politeness_hot_threshold", "bloom_mode",
-                     "bloom_broadcast_max_bytes", "bloom_shard_max_bytes",
-                     "bloom_seed_expected_per_shard")
+                     "politeness_hot_threshold")
     }))
     return eng, store, sim, seeds_df
 

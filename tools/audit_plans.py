@@ -19,10 +19,12 @@ Usage: python tools/audit_plans.py  (exit 1 on any failed check)
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF = "/root/testdata/sf0.01"
 
@@ -438,7 +440,7 @@ def main() -> int:
     lines.append("")
     for qname in ("j2_rehydrate_join", "f8_url_canonicalize", "flagship_crawl_round"):
         lines.append(f"## {qname}\n\n```\n{plans[qname].strip()}\n```\n")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(lines))
     print(f"\n{failed} failed checks; plans written to PLANS.md")
     return 1 if failed else 0

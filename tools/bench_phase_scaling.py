@@ -32,7 +32,8 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 LEVELS = (2, 8)
 REPEATS = 3
@@ -134,7 +135,7 @@ def main() -> int:
         i = sys.argv.index("--worker")
         run_worker(int(sys.argv[i + 1]), sys.argv[i + 2])
         return 0
-    data_dir = "/root/repo/.bench_tmp/scaling_input"
+    data_dir = os.path.join(ROOT, ".bench_tmp", "scaling_input")
     if not os.path.isdir(data_dir):
         print("run tools/bench_scaling.py first (writes the frozen input)", file=sys.stderr)
         return 1

@@ -28,7 +28,8 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 N_FRONTIER = 24_000_000
 N_SEEN = 8_000_000
@@ -231,7 +232,7 @@ def main() -> int:
         run_worker(int(sys.argv[i + 1]), sys.argv[i + 2])
         return 0
 
-    data_dir = "/root/repo/.bench_tmp/scaling_input"
+    data_dir = os.path.join(ROOT, ".bench_tmp", "scaling_input")
     if not os.path.exists(os.path.join(data_dir, "seen")):
         print("generating input ...", file=sys.stderr)
         write_input(data_dir)
@@ -400,7 +401,7 @@ def write_report(results: dict, cache_path: str) -> None:
             "workload (r02-r04 history above) clear it."
         )
 
-    with open("/root/repo/BENCH.md", "w") as f:
+    with open(os.path.join(ROOT, "BENCH.md"), "w") as f:
         f.write(f"""# BENCH — scaling evidence (N vs 4N parallelism)
 
 North-rule criterion: throughput scaling efficiency >= 0.8 from N to 4N
@@ -464,7 +465,7 @@ accumulated pair remains the cross-round best-of on this workload.
 {verdict_line}
 
 Reproduce: `python tools/bench_scaling.py` (per-level worker:
-`python tools/bench_scaling.py --worker <cores> /root/repo/.bench_tmp/scaling_input`)
+`python tools/bench_scaling.py --worker <cores> .bench_tmp/scaling_input`)
 
 ## Reading the numbers honestly
 
@@ -509,7 +510,7 @@ seen side under a single box's memory bandwidth. Both costs are fixed per
 ROUND (not per URL) and delta-bounded; on a real cluster the re-broadcast
 is a torrent fan-out and the confirm's seen side shards across nodes. More
 to the point, the engine ALREADY removes this serial section at scale: when
-the filter exceeds `bloom_broadcast_max_bytes` (64 MB) the auto mode flips
+the filter exceeds `seen.BROADCAST_MAX_BYTES` (64 MiB) the seen set flips
 to the shard-local `BloomShardTable`, whose per-round fold is a cogroup —
 no blob ever passes through the driver (pinned by tools/audit_plans.py).
 The miniature deliberately measures the broadcast variant because at its

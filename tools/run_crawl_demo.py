@@ -2,15 +2,17 @@
 its committed order log + seen set against the pure-Python reference
 simulator (the oracle). Exit 1 on any divergence.
 
-Usage: python tools/run_crawl_demo.py [--validate] [--no-bloom] [--seed N]
+Usage: python tools/run_crawl_demo.py [--validate] [--seed N]
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from ghcrawler_spark import fixtures
 from ghcrawler_spark.plans.round_engine import CrawlConfig, CrawlEngine
@@ -31,7 +33,6 @@ def build_sim_inputs(fx):
 
 def main() -> int:
     validate = "--validate" in sys.argv
-    use_bloom = "--no-bloom" not in sys.argv
     seed = 42
     if "--seed" in sys.argv:
         seed = int(sys.argv[sys.argv.index("--seed") + 1])
@@ -63,8 +64,7 @@ def main() -> int:
         store = SnapshotStore(root)
         eng = CrawlEngine(
             spark, store, corpus_df, links_df,
-            CrawlConfig(robots_deny=robots_deny, validate_images=validate,
-                        use_bloom=use_bloom),
+            CrawlConfig(robots_deny=robots_deny, validate_images=validate),
         )
         eng.seed(seeds_df)
         rounds = eng.run()

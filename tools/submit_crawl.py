@@ -7,7 +7,7 @@ itself is master-agnostic. Resuming is implicit: if the store already has a
 committed manifest, seeding is skipped and rounds continue from the last
 snapshot.
 
-Build the zip:  (cd /root/repo && zip -qr ghcrawler_spark.zip ghcrawler_spark)
+Build the zip from the checkout root:  zip -qr ghcrawler_spark.zip ghcrawler_spark
 
 Local smoke:
   python tools/submit_crawl.py --demo --store /tmp/crawlrun --rounds 5
@@ -17,12 +17,14 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
-def main() -> int:
+def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--seeds", help="parquet dir: url,type,tier,... (FIXTURES §3)")
     ap.add_argument("--links", help="parquet dir: src_url,edge,dst_url,dst_type")
@@ -33,11 +35,10 @@ def main() -> int:
     ap.add_argument("--bucket-capacity", type=int, default=64)
     ap.add_argument("--bucket-fill", type=int, default=32)
     ap.add_argument("--validate-images", action="store_true")
-    ap.add_argument("--no-bloom", action="store_true")
     ap.add_argument("--demo", action="store_true",
                     help="use the built-in deterministic fixture instead of "
                          "--seeds/--links/--corpus")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     from pyspark.sql import SparkSession
 
@@ -70,7 +71,6 @@ def main() -> int:
         bucket_capacity=args.bucket_capacity,
         bucket_fill=args.bucket_fill,
         validate_images=args.validate_images,
-        use_bloom=not args.no_bloom,
         max_rounds=args.rounds or 10_000,
     )
     eng = CrawlEngine(spark, store, corpus, links, cfg)
