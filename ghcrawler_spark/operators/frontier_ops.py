@@ -86,6 +86,20 @@ def scalable_rank_by_key(
     output); pass ``persisted`` to collect the handle for caller-side
     unpersist after the output is materialized.
     """
+    return scalable_rank_by_key_with_total(
+        df, order_cols, out_col, buckets, persisted
+    )[0]
+
+
+def scalable_rank_by_key_with_total(
+    df: DataFrame,
+    order_cols: list[str],
+    out_col: str = "rank",
+    buckets: int = 64,
+    persisted: list | None = None,
+) -> tuple[DataFrame, int]:
+    """``scalable_rank_by_key`` plus the row count, which its per-partition
+    counts collect already yields — no separate count job."""
     part = df.repartitionByRange(buckets, *[F.col(c) for c in order_cols]).withColumn(
         "_pid", F.spark_partition_id()
     )
@@ -104,11 +118,12 @@ def scalable_rank_by_key(
         offsets or [(0, 0)], "_pid int, _off long"
     )
     w = Window.partitionBy("_pid").orderBy(*[F.col(c) for c in order_cols])
-    return (
+    ranked = (
         part.join(F.broadcast(off_df), "_pid")
         .withColumn(out_col, (F.col("_off") + F.row_number().over(w)).cast("long"))
         .drop("_pid", "_off")
     )
+    return ranked, running
 
 
 def scalable_rank(

@@ -48,8 +48,9 @@ from __future__ import annotations
 
 import os
 import time
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import Future, ThreadPoolExecutor, wait
 from dataclasses import asdict, dataclass, field, replace
+from functools import partial
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -61,6 +62,7 @@ from ghcrawler_spark.hashing import stable_long_hash
 from ghcrawler_spark.operators.frontier_ops import (
     WEIGHT_SCALE,
     scalable_rank_by_key,
+    scalable_rank_by_key_with_total,
     trait_cap,
     weighted_rotation_order_scalable,
 )
@@ -310,8 +312,9 @@ _TRACE = os.environ.get("SPARK_GRAFT_TRACE", "") == "1"
 
 class _Tracer:
     """Phase stopwatch + Spark-job counter, printed when SPARK_GRAFT_TRACE=1
-    (perf forensics: on this host each job costs ~0.3-0.5s of fixed
-    scheduling latency, so phase job counts ARE the toy-scale cost model)."""
+    (perf forensics: each job pays a fixed scheduling latency — 0.035-0.05 s
+    on a quiet 4-core host, by the benchmark's job-latency probe — so at toy
+    scale a phase's job count is most of its cost)."""
 
     def __init__(self, label: str, spark: SparkSession | None = None):
         self.label = label
@@ -346,10 +349,33 @@ class _Tracer:
 from ghcrawler_spark.operators.dedup import _free_frame as _free_checkpoint  # noqa: E402
 
 
+def _start(calls: list) -> list[Future]:
+    """Start each zero-argument call on its own thread — the pool is sized
+    from the batch, so no call waits for a free worker — and return their
+    futures. Whoever starts them must ``_join`` them."""
+    pool = ThreadPoolExecutor(max_workers=max(1, len(calls)))
+    futures = [pool.submit(c) for c in calls]
+    pool.shutdown(wait=False)
+    return futures
+
+
+def _join(futures: list) -> None:
+    """Wait until EVERY future has finished, then raise the first failure
+    (in start order): a failed write must not return while its siblings
+    still write into the version being abandoned."""
+    wait(futures)
+    for f in futures:
+        f.result()
+
+
 def _run_writes(writes: list) -> None:
-    """Run independent write jobs concurrently (wall = slowest, not sum)."""
-    with ThreadPoolExecutor(max_workers=min(8, max(1, len(writes)))) as pool:
-        list(pool.map(lambda w: w(), writes))
+    """Run independent write jobs concurrently (wall = slowest, not sum) and
+    return once all have finished; the first failure is raised after that.
+    A round does not call this: it ``_start``s its early writes as soon as
+    the histogram collect has materialized `fetched` and its late writes
+    after the enqueue counts, and ``_join``s both batches before the
+    manifest commit — a round never commits with a write still running."""
+    _join(_start(writes))
 
 
 class CrawlEngine:
@@ -701,9 +727,11 @@ class CrawlEngine:
         ev_excl = denied.select("url", F.lit(rnd).alias("round"))
         fresh = allowed.join(frontier.select("url"), "url", "left_anti")
         pf, fresh_policy, mp = EVENT_POLICY
+        ranked, n_ingested = scalable_rank_by_key_with_total(
+            fresh, ["url"], "_rank", persisted=persisted
+        )
         ingested = (
-            scalable_rank_by_key(fresh, ["url"], "_rank", persisted=persisted)
-            .select(
+            ranked.select(
                 "url",
                 "type",
                 F.when(F.col("throttled"), "later")
@@ -723,7 +751,7 @@ class CrawlEngine:
             .persist()
         )
         persisted.append(ingested)
-        return ingested, ingested.count(), ev_dead, ev_excl, tomb_rows, n_tomb
+        return ingested, n_ingested, ev_dead, ev_excl, tomb_rows, n_tomb
 
     def current_frontier(self) -> DataFrame:
         """The live frontier view at the committed manifest version."""
@@ -914,9 +942,10 @@ class CrawlEngine:
         # rank, NOT a global Window.orderBy (a 10^10-URL seed list would sort
         # in one task)
         persisted: list = []
-        frontier = scalable_rank_by_key(
+        ranked, n_seeded = scalable_rank_by_key_with_total(
             allowed, ["url"], "enqueue_seq", persisted=persisted
-        ).select(
+        )
+        frontier = ranked.select(
             "url",
             "type",
             "tier",
@@ -933,9 +962,9 @@ class CrawlEngine:
             root_urn(F.lit("host"), F.col("host")).alias("qualifier"),
             "map_name",
         )
-        n_seeded = frontier.count()
         # v0 holds the BASE tables of the merge-on-read model; rounds write
         # only adds/removes deltas until a compaction moves the base pointer
+        self.store.clear_version(0)
         self.store.write_tables(
             0,
             {
@@ -999,18 +1028,27 @@ class CrawlEngine:
     # -- one round -------------------------------------------------------------
 
     def run_round(self) -> bool:
-        if self.cfg.shuffle_partitions is None:
-            return self._run_round_inner()
-        prev_sp = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set(
-            "spark.sql.shuffle.partitions", str(self.cfg.shuffle_partitions)
-        )
+        prev_sp = None
+        if self.cfg.shuffle_partitions is not None:
+            prev_sp = self.spark.conf.get("spark.sql.shuffle.partitions")
+            self.spark.conf.set(
+                "spark.sql.shuffle.partitions", str(self.cfg.shuffle_partitions)
+            )
+        pending: list = []
         try:
-            return self._run_round_inner()
+            return self._run_round_inner(pending)
         finally:
-            self.spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
+            # nothing the round started may outlive it: when it raises, the
+            # writes already running finish (and their errors yield to the
+            # one that ended the round) before the caller can replay it
+            wait(pending)
+            if prev_sp is not None:
+                self.spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
 
-    def _run_round_inner(self) -> bool:
+    def _run_round_inner(self, pending: list) -> bool:
+        """One round. Spark actions that do not depend on each other run
+        side by side on pool threads; their futures go into ``pending`` and
+        are all joined before the manifest commit."""
         cfg = self.cfg
         manifest = self.store.read_manifest()
         version = manifest["current"]
@@ -1026,23 +1064,28 @@ class CrawlEngine:
         persisted: list = []  # frames to unpersist once the round commits
         tr = _Tracer(f"round {rnd}", self.spark)
         bases = self._bases(manifest)
-        frontier0 = self._read_frontier(version, bases)
+        # persist the merged frontier view: the event absorb and half a dozen
+        # downstream frames (hosts, dead, eligible, remaining, ...) scan it,
+        # and the merge-on-read union+anti-join is no free parquet re-read
+        frontier = self._read_frontier(version, bases).persist()
+        persisted.append(frontier)
         # 0. event ingest: absorb staged webhook batches into the events tier
         # (weight 10) before selection — ROUND SPEC v2 step 0 (v5: deletion
         # directives split out as tombstone rows)
         ingested, n_ingested, ev_dead, ev_excl, tomb_new, n_tomb = (
             self._absorb_events(
-                rnd, next_seq, pending_files, frontier0, persisted, version
+                rnd, next_seq, pending_files, frontier, persisted, version
             )
         )
+        mor_frontier = frontier
         if ingested is not None:
-            frontier0 = frontier0.unionByName(ingested)
+            # cached again as ONE relation: over a union of two cached scans
+            # the rotation and children plans each run more query stages.
+            # Built from the two caches (no parquet re-read); the MOR read's
+            # cache is dropped once the host stats below have filled it.
+            frontier = frontier.unionByName(ingested).persist()
+            persisted.append(frontier)
             next_seq += n_ingested
-        # persist the merged frontier view: half a dozen downstream frames
-        # (hosts, dead, eligible, remaining, ...) scan it, and the merge-on-
-        # read union+anti-join is no longer a free parquet re-read
-        frontier = frontier0.persist()
-        persisted.append(frontier)
         seen = self._read_seen(version, bases)
         # persist: read twice (refill join + changed-host delta detection)
         host_state = self._read_host_state(version, bases).persist()
@@ -1155,6 +1198,8 @@ class CrawlEngine:
         n_over = int(srow["n_over"] or 0)
         n_dead = int(srow["n_dead"] or 0)
         n_deferred = int(srow["n_deferred"] or 0)
+        if mor_frontier is not frontier:
+            mor_frontier.unpersist()
         over_hosts = host_stats.filter(
             F.coalesce(F.col("_tot_cost"), F.lit(0)) > F.col("level")
         ).select("host")
@@ -1524,6 +1569,226 @@ class CrawlEngine:
                 links_col.alias("links"),
             )
 
+        # 9. bucket spend (compute cost per popped row) + throttle benching.
+        # Measured mode: charge = max(1, elapsed - baseline) once a baseline
+        # exists; the preallocated static cost until then (computeLimiter's
+        # consume(elapsed - baseline - preallocated) reconciliation)
+        if cfg.measured_costs and baseline_prev is not None:
+            charge_col = F.greatest(
+                F.lit(1).cast("long"),
+                F.col("_elapsed") - F.lit(int(baseline_prev)),
+            )
+        else:
+            charge_col = F.col("_cost")
+        spend = fetched.groupBy("host").agg(F.sum(charge_col).alias("_n"))
+        levels_next = levels.join(spend, "host", "left").select(
+            "host",
+            (F.col("level") - F.coalesce(F.col("_n"), F.lit(0))).alias("level"),
+            "bench_until",
+        )
+        if cfg.bench_on_throttle:
+            # hosts that took a transient (throttle-class) failure this round
+            # are benched until rnd + bench_rounds (githubFetcher.js:176-192)
+            thr = (
+                fetched.filter(F.col("outcome") == "Throttled")
+                .select("host")
+                .distinct()
+                .withColumn("_bench", F.lit(rnd + cfg.bench_rounds).cast("long"))
+            )
+            levels_next = levels_next.join(thr, "host", "left").select(
+                "host",
+                "level",
+                F.greatest(
+                    F.col("bench_until"), F.coalesce(F.col("_bench"), F.lit(0))
+                ).alias("bench_until"),
+            )
+
+        # v5 deadletter lanes beyond max_attempts: excludeNotFound routes
+        # Missing rows immediately (crawler.js:528-533); Bailed is the
+        # post-elevated-retry permanent failure (githubFetcher.js:67-72)
+        extra_dl: list[DataFrame] = []
+        n_dl_extra = 0
+        if cfg.exclude_not_found and hist.get("Missing", 0) > 0:
+            extra_dl.append(
+                fetched.filter(F.col("outcome") == "Missing").select(
+                    "url", "type", "tier", F.lit(rnd).alias("round"),
+                    "attempt", F.lit("excludeNotFound").alias("reason"),
+                )
+            )
+            n_dl_extra += hist["Missing"]
+        if cfg.bailed_retry and hist.get("Bailed", 0) > 0:
+            extra_dl.append(
+                fetched.filter(F.col("outcome") == "Bailed").select(
+                    "url", "type", "tier", F.lit(rnd).alias("round"),
+                    "attempt", F.lit("Bailed").alias("reason"),
+                )
+            )
+            n_dl_extra += hist["Bailed"]
+
+        # ---- state writes: merge-on-read. A round writes ONLY the rows it
+        # touched — frontier adds (children+requeues), frontier removes
+        # (popped+dead enqueue_seqs, i.e. Iceberg-style equality deletes),
+        # deadletter adds, docs upserts, and the CHANGED host-state rows.
+        # Every cfg.compact_every rounds the current frontier/seen/stored/
+        # host_state views are rewritten as new BASES, which bounds both the
+        # delta-dir fan-in and the delete-key anti-join a read performs.
+        hs_old = host_state.select(
+            "host",
+            F.col("level").alias("_ol"),
+            F.col("bench_until").alias("_ob"),
+        )
+        hs_delta = (
+            levels_next.join(hs_old, "host", "left")
+            .filter(
+                F.col("_ol").isNull()
+                | (F.col("_ol") != F.col("level"))
+                | (F.col("_ob") != F.col("bench_until"))
+            )
+            .select(
+                "host",
+                # delta parquet must match the base table's long schema
+                F.col("level").cast("long").alias("level"),
+                F.col("bench_until").cast("long").alias("bench_until"),
+                F.lit(rnd).cast("int").alias("round"),
+            )
+        )
+        # compaction round: every base except the frontier's reads only
+        # frames that exist now, so those bases join the early writes below;
+        # the frontier base needs this round's enqueues and goes out last
+        compacting = bool(
+            cfg.compact_every and rnd - bases["frontier"] >= cfg.compact_every
+        )
+        base_tables: dict = {}
+        new_bases = dict(bases)
+        if compacting:
+            base_tables["seen"] = seen_next
+            base_tables["host_state"] = levels_next
+            # doc-store lookup base: prior view ∪ this round's upserts
+            prior = (
+                stored_lookup
+                if stored_lookup is not None
+                else self._empty(STORED_SCHEMA)
+            )
+            base_tables["stored"] = (
+                prior.unionByName(docs_new.select("url", "round", "version"))
+                .groupBy("url")
+                .agg(F.max("round").alias("round"), F.max("version").alias("version"))
+            )
+            if tomb_lookup is not None:
+                # tombstones compact with everything else: the base is the
+                # deduped (url, latest round) view, so readers union ≤
+                # compact_every delta dirs on top of it
+                base_tables["tombstones"] = tomb_lookup.select(
+                    "url", F.col("tomb_round").cast("int").alias("round")
+                )
+            for name in ("frontier", *base_tables):
+                new_bases[name] = rnd
+        dl = None
+        if n_dead > 0 or ev_dead is not None or extra_dl:
+            dl = dead.select(
+                "url",
+                "type",
+                "tier",
+                F.lit(rnd).alias("round"),
+                "attempt",
+                F.lit("max_attempts").alias("reason"),
+            )
+            if ev_dead is not None:
+                dl = dl.unionByName(ev_dead)
+            for x in extra_dl:
+                dl = dl.unionByName(x)
+        # per-partition lineage (north_rule): which (tier, host-bucket)
+        # partition produced what this round — the audit trail that lets a
+        # resumed run prove each partition was applied exactly once
+        lineage = (
+            fetched.groupBy(
+                "tier",
+                F.pmod(F.xxhash64("host"), F.lit(LINEAGE_BUCKETS))
+                .cast("int")
+                .alias("host_bucket"),
+            )
+            .agg(
+                F.count(F.lit(1)).alias("n_popped"),
+                F.sum((F.col("outcome") == "Processed").cast("long")).alias("n_processed"),
+                F.sum((F.col("outcome") == "Traversed").cast("long")).alias("n_traversed"),
+                F.sum(F.col("outcome").isin(*REQUEUE_CLASS).cast("long")).alias("n_requeued"),
+                F.sum((F.col("outcome") == "Missing").cast("long")).alias("n_missing"),
+            )
+            .select(
+                F.lit(rnd).alias("round"),
+                "tier",
+                "host_bucket",
+                "n_popped",
+                "n_processed",
+                "n_traversed",
+                "n_requeued",
+                "n_missing",
+                F.lit(0).cast("long").alias("n_deferred"),
+            )
+        )
+        if n_deferred > 0:
+            # Deferred rows (benched-host withhold) never reach `fetched`;
+            # they land in lineage as their own per-partition counts so the
+            # audit trail shows WHICH (tier, host-bucket) sat out the round
+            # (crawler.js:512-515 deferred visibility). Rides the lineage
+            # write job — no extra action.
+            benched = host_stats.filter(F.col("bench_until") >= rnd).select(
+                "host"
+            )
+            deferred_rows = (
+                eligible.join(F.broadcast(benched), "host", "left_semi")
+                .groupBy(
+                    "tier",
+                    F.pmod(F.xxhash64("host"), F.lit(LINEAGE_BUCKETS))
+                    .cast("int")
+                    .alias("host_bucket"),
+                )
+                .agg(F.count(F.lit(1)).alias("n_deferred"))
+                .select(
+                    F.lit(rnd).alias("round"),
+                    "tier",
+                    "host_bucket",
+                    F.lit(0).cast("long").alias("n_popped"),
+                    F.lit(0).cast("long").alias("n_processed"),
+                    F.lit(0).cast("long").alias("n_traversed"),
+                    F.lit(0).cast("long").alias("n_requeued"),
+                    F.lit(0).cast("long").alias("n_missing"),
+                    F.col("n_deferred").cast("long").alias("n_deferred"),
+                )
+            )
+            lineage = lineage.unionByName(deferred_rows)
+
+        # ---- early state writes: these deltas and bases read only `fetched`
+        # (materialized by the histogram collect above) and frames cached
+        # before it, so they run while the children pipeline below computes.
+        # A crashed attempt's version directory is cleared once, before any
+        # base write starts. Every future the round starts goes into
+        # `pending`; all are joined before the manifest commit, and run_round
+        # waits for them when the round raises.
+        self.store.clear_version(rnd)
+        append = self.store.write_append
+        early = [
+            partial(append, rnd, "host_state_adds", hs_delta),
+            partial(
+                append, rnd, "frontier_removes",
+                fetched.select("enqueue_seq").unionByName(dead.select("enqueue_seq")),
+            ),
+            partial(append, rnd, "seen", newly_seen),
+            partial(append, rnd, "order_log", log_rows),
+            partial(append, rnd, "lineage", lineage),
+        ]
+        early += [
+            partial(self.store.write_tables, rnd, {name: df})
+            for name, df in base_tables.items()
+        ]
+        if dl is not None:
+            early.append(partial(append, rnd, "deadletter_adds", dl))
+        if tomb_new is not None:
+            early.append(partial(append, rnd, "tombstones", tomb_new))
+        if hist.get("Processed", 0) > 0:
+            early.append(partial(append, rnd, "docs", docs_new))
+        pending.extend(_start(early))
+
         # 7. children of Traversed pages (all selected-derived frames read
         # the persisted `fetched` — `selected` itself is never re-executed)
         remaining = eligible.join(fetched.select("url"), "url", "left_anti")
@@ -1679,17 +1944,23 @@ class CrawlEngine:
             "url_hash", stable_long_hash(F.col("url"))
         ).persist()
         persisted.append(uniq)
-        n_cand = uniq.count()
-        cand_broadcastable = n_cand <= cfg.dedup_broadcast_max
         # INCREMENTAL: Bloom union is bitwise OR — fold only this round's
         # newly-seen keys into last round's persisted shard blobs instead
         # of rescanning the whole seen set (O(batch), not O(total)).
         # Filter contents only affect probe selectivity, never output
         # (exact anti-join confirms), so a replay that merges onto a
         # slightly different filter still commits identical state.
+        # The merge reads only `fetched`, so it runs on a pool thread while
+        # the candidate count fills the `uniq` cache.
         bloom_prev = self._load_bloom(version, manifest, seen)
-        bloom = bloom_prev.merged(newly_seen.select("url_hash"))
-        tr.mark("bloom merge")
+        (merging,) = _start(
+            [partial(bloom_prev.merged, newly_seen.select("url_hash"))]
+        )
+        pending.append(merging)
+        n_cand = uniq.count()
+        cand_broadcastable = n_cand <= cfg.dedup_broadcast_max
+        bloom = merging.result()
+        tr.mark("candidate count + bloom merge")
         # newly-seen rows this round = selected − requeued, already counted
         # by the outcome histogram
         bloom_total = bloom.live_total(
@@ -1769,18 +2040,18 @@ class CrawlEngine:
         # localCheckpoint: both the allowed (frontier) and denied (excluded)
         # branches read this frame, and its plan (links join + Bloom probe +
         # anti-joins) would otherwise be re-embedded in the enqueue/write
-        # trees — truncate it like `fetched` above
-        # (as there, the call itself runs the upstream shuffle and broadcast
-        # stages — 17 jobs in round 1 of the small-round crawl benchmark.
-        # The last stage is not run serially either: the enqueue counts
-        # collect below reads `fresh` from several concurrent AQE jobs, 6
-        # in that round, and whichever reaches a partition first fills it.)
+        # trees — truncate it like `fetched` above. EAGER, unlike `fetched`:
+        # the enqueue counts collect below reads it from several concurrent
+        # AQE jobs (6 in round 1 of the small-round crawl benchmark). Left
+        # to them, the first job to fill a partition truncates the lineage
+        # while the others' tasks still report SQL metrics of the dropped
+        # plan ("non-existent accumulator" errors). One serial job fills it.
         fresh = (
             marked.withColumn(
                 "_bounced", F.coalesce(F.col("_bounced"), F.lit(False))
             )
             .withColumn("host", extract_host(F.col("url")))
-            .localCheckpoint(eager=False)
+            .localCheckpoint(eager=True)
         )
         fresh_allowed, fresh_denied = self._robots_allowed(
             fresh.filter(~F.col("_bounced"))
@@ -1894,12 +2165,13 @@ class CrawlEngine:
             .drop("_off")
             .persist()
         )
-        # MATERIALIZE before the concurrent write jobs: several of them scan
-        # new_rows, and a first-touch race on an unfilled cached frame from
-        # parallel jobs starves the few local executor slots (tasks block on
-        # the cache-fill lock while holding slots). One aggregation over the
-        # already-cached inputs fills the blocks once, serially — and its
-        # 2-row result IS the per-group totals (children count + J4
+        # MATERIALIZE before the late writes start: frontier_adds and the
+        # compaction frontier base both scan new_rows, and a first-touch race
+        # on an unfilled cached frame from parallel jobs starves the few
+        # local executor slots (tasks block on the cache-fill lock while
+        # holding slots); the early writes already running read no new_rows.
+        # One aggregation over the already-cached inputs fills the blocks
+        # once, serially — and its 2-row result IS the per-group totals (children count + J4
         # attenuation drops: visible candidate edges collapsed into kept
         # children, occurrences - 1 per enqueued dst), so the former
         # separate totals collect is gone.
@@ -1936,67 +2208,11 @@ class CrawlEngine:
             "map_name",
         )
 
-        # 9. bucket spend (compute cost per popped row) + throttle benching.
-        # Measured mode: charge = max(1, elapsed - baseline) once a baseline
-        # exists; the preallocated static cost until then (computeLimiter's
-        # consume(elapsed - baseline - preallocated) reconciliation)
-        if cfg.measured_costs and baseline_prev is not None:
-            charge_col = F.greatest(
-                F.lit(1).cast("long"),
-                F.col("_elapsed") - F.lit(int(baseline_prev)),
-            )
-        else:
-            charge_col = F.col("_cost")
-        spend = fetched.groupBy("host").agg(F.sum(charge_col).alias("_n"))
-        levels_next = levels.join(spend, "host", "left").select(
-            "host",
-            (F.col("level") - F.coalesce(F.col("_n"), F.lit(0))).alias("level"),
-            "bench_until",
-        )
-        if cfg.bench_on_throttle:
-            # hosts that took a transient (throttle-class) failure this round
-            # are benched until rnd + bench_rounds (githubFetcher.js:176-192)
-            thr = (
-                fetched.filter(F.col("outcome") == "Throttled")
-                .select("host")
-                .distinct()
-                .withColumn("_bench", F.lit(rnd + cfg.bench_rounds).cast("long"))
-            )
-            levels_next = levels_next.join(thr, "host", "left").select(
-                "host",
-                "level",
-                F.greatest(
-                    F.col("bench_until"), F.coalesce(F.col("_bench"), F.lit(0))
-                ).alias("bench_until"),
-            )
-
         # size arithmetic — no count jobs (invariant-checked by tests)
         n_frontier_after = (
             manifest["frontier_size"] + n_ingested
             - n_dead - n_selected + n_children + n_requeued
         )
-
-        # v5 deadletter lanes beyond max_attempts: excludeNotFound routes
-        # Missing rows immediately (crawler.js:528-533); Bailed is the
-        # post-elevated-retry permanent failure (githubFetcher.js:67-72)
-        extra_dl: list[DataFrame] = []
-        n_dl_extra = 0
-        if cfg.exclude_not_found and hist.get("Missing", 0) > 0:
-            extra_dl.append(
-                fetched.filter(F.col("outcome") == "Missing").select(
-                    "url", "type", "tier", F.lit(rnd).alias("round"),
-                    "attempt", F.lit("excludeNotFound").alias("reason"),
-                )
-            )
-            n_dl_extra += hist["Missing"]
-        if cfg.bailed_retry and hist.get("Bailed", 0) > 0:
-            extra_dl.append(
-                fetched.filter(F.col("outcome") == "Bailed").select(
-                    "url", "type", "tier", F.lit(rnd).alias("round"),
-                    "attempt", F.lit("Bailed").alias("reason"),
-                )
-            )
-            n_dl_extra += hist["Bailed"]
 
         metrics_new = self.spark.createDataFrame(
             [(rnd, n_selected, n_children, n_requeued, n_dead + n_dl_extra,
@@ -2005,173 +2221,32 @@ class CrawlEngine:
             METRICS_SCHEMA,
         )
 
-        # ---- state writes: merge-on-read. A round writes ONLY the rows it
-        # touched — frontier adds (children+requeues), frontier removes
-        # (popped+dead enqueue_seqs, i.e. Iceberg-style equality deletes),
-        # deadletter adds, docs upserts, and the CHANGED host-state rows.
-        # Every cfg.compact_every rounds the current frontier/seen/stored/
-        # host_state views are rewritten as new BASES, which bounds both the
-        # delta-dir fan-in and the delete-key anti-join a read performs.
-        hs_old = host_state.select(
-            "host",
-            F.col("level").alias("_ol"),
-            F.col("bench_until").alias("_ob"),
-        )
-        hs_delta = (
-            levels_next.join(hs_old, "host", "left")
-            .filter(
-                F.col("_ol").isNull()
-                | (F.col("_ol") != F.col("level"))
-                | (F.col("_ob") != F.col("bench_until"))
-            )
-            .select(
-                "host",
-                # delta parquet must match the base table's long schema
-                F.col("level").cast("long").alias("level"),
-                F.col("bench_until").cast("long").alias("bench_until"),
-                F.lit(rnd).cast("int").alias("round"),
-            )
-        )
-        full_tables = {}
-        new_bases = dict(bases)
-        if cfg.compact_every and rnd - bases["frontier"] >= cfg.compact_every:
-            full_tables["frontier"] = remaining.unionByName(new_rows_clean)
-            new_bases["frontier"] = rnd
-            full_tables["seen"] = seen_next
-            new_bases["seen"] = rnd
-            full_tables["host_state"] = levels_next
-            new_bases["host_state"] = rnd
-            # doc-store lookup base: prior view ∪ this round's upserts
-            prior = (
-                stored_lookup
-                if stored_lookup is not None
-                else self._empty(STORED_SCHEMA)
-            )
-            full_tables["stored"] = (
-                prior.unionByName(docs_new.select("url", "round", "version"))
-                .groupBy("url")
-                .agg(F.max("round").alias("round"), F.max("version").alias("version"))
-            )
-            new_bases["stored"] = rnd
-            if tomb_lookup is not None:
-                # tombstones compact with everything else: the base is the
-                # deduped (url, latest round) view, so readers union ≤
-                # compact_every delta dirs on top of it
-                full_tables["tombstones"] = tomb_lookup.select(
-                    "url", F.col("tomb_round").cast("int").alias("round")
-                )
-                new_bases["tombstones"] = rnd
         frontier_adds = new_rows_clean
         if ingested is not None:
             frontier_adds = ingested.unionByName(frontier_adds)
-        writes: list = [
-            lambda: self.store.write_append(rnd, "host_state_adds", hs_delta),
-            lambda: self.store.write_append(rnd, "frontier_adds", frontier_adds),
-            lambda: self.store.write_append(
-                rnd,
-                "frontier_removes",
-                fetched.select("enqueue_seq").unionByName(dead.select("enqueue_seq")),
-            ),
-            lambda: self.store.write_append(rnd, "seen", newly_seen),
-            lambda: self.store.write_append(rnd, "order_log", log_rows),
+        # ---- late state writes: the frames of this round's enqueues and the
+        # merged seen set. The frontier base of a compaction round is the
+        # largest write, so it starts first.
+        late = []
+        if compacting:
+            late.append(partial(
+                self.store.write_tables, rnd,
+                {"frontier": remaining.unionByName(new_rows_clean)},
+            ))
+        late += [
+            partial(append, rnd, "frontier_adds", frontier_adds),
+            partial(append, rnd, "metrics", metrics_new),
+            partial(self._write_bloom, rnd, bloom),
         ]
-        if full_tables:  # compaction round: rewrite the MOR bases
-            writes.append(lambda: self.store.write_tables(rnd, full_tables))
-        if n_dead > 0 or ev_dead is not None or extra_dl:
-            dl = dead.select(
-                "url",
-                "type",
-                "tier",
-                F.lit(rnd).alias("round"),
-                "attempt",
-                F.lit("max_attempts").alias("reason"),
-            )
-            if ev_dead is not None:
-                dl = dl.unionByName(ev_dead)
-            for x in extra_dl:
-                dl = dl.unionByName(x)
-            writes.append(
-                lambda: self.store.write_append(rnd, "deadletter_adds", dl)
-            )
-        if tomb_new is not None:
-            writes.append(
-                lambda: self.store.write_append(rnd, "tombstones", tomb_new)
-            )
-        # per-partition lineage (north_rule): which (tier, host-bucket)
-        # partition produced what this round — the audit trail that lets a
-        # resumed run prove each partition was applied exactly once
-        lineage = (
-            fetched.groupBy(
-                "tier",
-                F.pmod(F.xxhash64("host"), F.lit(LINEAGE_BUCKETS))
-                .cast("int")
-                .alias("host_bucket"),
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_popped"),
-                F.sum((F.col("outcome") == "Processed").cast("long")).alias("n_processed"),
-                F.sum((F.col("outcome") == "Traversed").cast("long")).alias("n_traversed"),
-                F.sum(F.col("outcome").isin(*REQUEUE_CLASS).cast("long")).alias("n_requeued"),
-                F.sum((F.col("outcome") == "Missing").cast("long")).alias("n_missing"),
-            )
-            .select(
-                F.lit(rnd).alias("round"),
-                "tier",
-                "host_bucket",
-                "n_popped",
-                "n_processed",
-                "n_traversed",
-                "n_requeued",
-                "n_missing",
-                F.lit(0).cast("long").alias("n_deferred"),
-            )
-        )
-        if n_deferred > 0:
-            # Deferred rows (benched-host withhold) never reach `fetched`;
-            # they land in lineage as their own per-partition counts so the
-            # audit trail shows WHICH (tier, host-bucket) sat out the round
-            # (crawler.js:512-515 deferred visibility). Rides the lineage
-            # write job — no extra action.
-            benched = host_stats.filter(F.col("bench_until") >= rnd).select(
-                "host"
-            )
-            deferred_rows = (
-                eligible.join(F.broadcast(benched), "host", "left_semi")
-                .groupBy(
-                    "tier",
-                    F.pmod(F.xxhash64("host"), F.lit(LINEAGE_BUCKETS))
-                    .cast("int")
-                    .alias("host_bucket"),
-                )
-                .agg(F.count(F.lit(1)).alias("n_deferred"))
-                .select(
-                    F.lit(rnd).alias("round"),
-                    "tier",
-                    "host_bucket",
-                    F.lit(0).cast("long").alias("n_popped"),
-                    F.lit(0).cast("long").alias("n_processed"),
-                    F.lit(0).cast("long").alias("n_traversed"),
-                    F.lit(0).cast("long").alias("n_requeued"),
-                    F.lit(0).cast("long").alias("n_missing"),
-                    F.col("n_deferred").cast("long").alias("n_deferred"),
-                )
-            )
-            lineage = lineage.unionByName(deferred_rows)
-        writes.append(lambda: self.store.write_append(rnd, "lineage", lineage))
-        if hist.get("Processed", 0) > 0:
-            writes.append(lambda: self.store.write_append(rnd, "docs", docs_new))
         if self.cfg.robots_deny:
             excl = fresh_denied.select("url", F.lit(rnd).alias("round"))
             if ev_excl is not None:
                 excl = ev_excl.unionByName(excl)
-            writes.append(lambda: self.store.write_append(rnd, "excluded", excl))
-        writes.append(lambda: self.store.write_append(rnd, "metrics", metrics_new))
-        writes.append(lambda: self._write_bloom(rnd, bloom))
-        # the round's dozen-odd state writes are independent parquet jobs over
-        # small frames — submit them concurrently so the wall cost is the
-        # slowest write, not the sum of per-job scheduling latencies. (The
-        # durability point is still the single manifest swap in commit().)
-        _run_writes(writes)
+            late.append(partial(append, rnd, "excluded", excl))
+        pending.extend(_start(late))
+        # the durability point is the single manifest swap in commit(): it
+        # runs only once every write of the round has finished
+        _join(pending)
         tr.mark("state writes")
         # ingest bookkeeping: {staged filename → absorb round}. Files whose
         # absorb round is at or before the (new) frontier base pointer are
@@ -2510,6 +2585,7 @@ class CrawlEngine:
         n_keep = keep.count()
         if n_keep == n_before:
             return 0
+        self.store.clear_version(rnd)
         self.store.write_tables(rnd, {"deadletter": keep})
         new_bases = dict(bases)
         new_bases["deadletter"] = rnd
@@ -2599,6 +2675,7 @@ class CrawlEngine:
         # 0): the reference deletes the deadletter doc before pushing, so a
         # bounced requeue still consumes it (crawlerService.js:119-130).
         # host_state is untouched: its base pointer + deltas carry forward.
+        self.store.clear_version(rnd)
         self.store.write_tables(rnd, {"deadletter": keep})
         self.store.write_append(rnd, "frontier_adds", revived)
         new_bases = dict(bases)

@@ -55,11 +55,18 @@ class SnapshotStore:
 
     # -- IO -----------------------------------------------------------------
 
-    def write_tables(self, version: int, tables: dict[str, DataFrame]) -> None:
-        """Write tables under the (uncommitted) version directory."""
+    def clear_version(self, version: int) -> None:
+        """Remove an uncommitted version directory left by a crashed attempt.
+        Call it once before a version's tables are written: the table writes
+        may run concurrently, so none of them may clear the directory."""
         vdir = self._vdir(version)
-        if os.path.exists(vdir):  # leftover from a crashed attempt
+        if os.path.exists(vdir):
             shutil.rmtree(vdir)
+
+    def write_tables(self, version: int, tables: dict[str, DataFrame]) -> None:
+        """Write tables under the (uncommitted) version directory, after
+        ``clear_version``."""
+        vdir = self._vdir(version)
         for name, df in tables.items():
             df.write.mode("overwrite").parquet(os.path.join(vdir, name))
 
