@@ -19,10 +19,10 @@ digest pinned in tests/test_images.py.
 
 Round layer, one Spark session with an event log:
 
-    python bench_extra.py --round-timeline [--seed N] [--seconds S]
+    python bench_extra.py --round-timeline [--seed N]
 
 runs the benchmark's ``crawl_small_rounds`` crawl (``crawlbench/run.py``
-builds it the same way) and prints, for each timed round, its SQL executions
+builds it the same way, with the same 12 s run length) and prints, for each timed round, its SQL executions
 in start order — start offset from the round start, wall, job count and call
 site — and the idle gaps of 50 ms or more in which no Spark job ran. The
 last line is one JSON object {"seed", "rounds": [{"round", "wall_s",
@@ -58,6 +58,7 @@ def kernel_jpeg(passes: int) -> dict:
 
 
 GAP_S = 0.05  # idle gaps shorter than this are not listed
+RUN_SECONDS = 12  # the benchmark's run length (BENCHMARK.json "run_seconds")
 
 
 def _event_log(log_dir: str) -> tuple[dict, list]:
@@ -99,7 +100,7 @@ def _site(text: str) -> str:
     return f"{head}{sep}{os.path.basename(path)}" if sep else text[:80]
 
 
-def round_timeline(seed: int, seconds: float) -> dict:
+def round_timeline(seed: int) -> dict:
     from crawlbench import run as bench_run
     from crawlbench import workloads
     from crawlbench.trace import traced_conf
@@ -130,7 +131,7 @@ def round_timeline(seed: int, seconds: float) -> dict:
         spark.sparkContext.setLogLevel("ERROR")
         CrawlEngine.run_round = timed_run_round
         try:
-            res = workloads.run_crawl(spark, "crawl_small_rounds", seed, seconds, work)
+            res = workloads.run_crawl(spark, "crawl_small_rounds", seed, RUN_SECONDS, work)
         finally:
             CrawlEngine.run_round = real_run_round
         bench_run.stop_spark(spark)
@@ -180,8 +181,6 @@ def main() -> None:
     ap.add_argument("--round-timeline", action="store_true",
                     help="per-round SQL executions and idle gaps of a small-round crawl")
     ap.add_argument("--seed", type=int, default=3, help="crawl seed (--round-timeline)")
-    ap.add_argument("--seconds", type=float, default=12,
-                    help="crawl time budget (--round-timeline)")
     ap.add_argument("--suffix", default="", help="suffix for plan filenames, e.g. _before")
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args()
@@ -189,7 +188,7 @@ def main() -> None:
         print(json.dumps(kernel_jpeg(args.passes or 10)))
         return
     if args.round_timeline:
-        print(json.dumps(round_timeline(args.seed, args.seconds)))
+        print(json.dumps(round_timeline(args.seed)))
         return
 
     from ghcrawler_spark.plans import analytics

@@ -48,7 +48,7 @@ from __future__ import annotations
 
 import os
 import time
-from concurrent.futures import Future, ThreadPoolExecutor, wait
+from concurrent.futures import ThreadPoolExecutor, wait
 from dataclasses import asdict, dataclass, field, replace
 from functools import partial
 
@@ -349,14 +349,10 @@ class _Tracer:
 from ghcrawler_spark.operators.dedup import _free_frame as _free_checkpoint  # noqa: E402
 
 
-def _start(calls: list) -> list[Future]:
-    """Start each zero-argument call on its own thread — the pool is sized
-    from the batch, so no call waits for a free worker — and return their
-    futures. Whoever starts them must ``_join`` them."""
-    pool = ThreadPoolExecutor(max_workers=max(1, len(calls)))
-    futures = [pool.submit(c) for c in calls]
-    pool.shutdown(wait=False)
-    return futures
+# worker threads of a round's pool: more than the writes, Bloom merge and
+# compaction bases a round can have running at once (about 20), so a
+# submitted action never queues behind another
+ROUND_WORKERS = 32
 
 
 def _join(futures: list) -> None:
@@ -369,13 +365,9 @@ def _join(futures: list) -> None:
 
 
 def _run_writes(writes: list) -> None:
-    """Run independent write jobs concurrently (wall = slowest, not sum) and
-    return once all have finished; the first failure is raised after that.
-    A round does not call this: it ``_start``s its early writes as soon as
-    the histogram collect has materialized `fetched` and its late writes
-    after the enqueue counts, and ``_join``s both batches before the
-    manifest commit — a round never commits with a write still running."""
-    _join(_start(writes))
+    """Run independent write jobs concurrently (wall = slowest, not sum)."""
+    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+        _join([pool.submit(w) for w in writes])
 
 
 class CrawlEngine:
@@ -1034,21 +1026,24 @@ class CrawlEngine:
             self.spark.conf.set(
                 "spark.sql.shuffle.partitions", str(self.cfg.shuffle_partitions)
             )
-        pending: list = []
         try:
-            return self._run_round_inner(pending)
+            # leaving the pool waits for every action the round submitted,
+            # so none outlives the round, whether it commits or raises (then
+            # the writes still running finish before the caller can replay)
+            with ThreadPoolExecutor(max_workers=ROUND_WORKERS) as pool:
+                return self._run_round_inner(pool)
         finally:
-            # nothing the round started may outlive it: when it raises, the
-            # writes already running finish (and their errors yield to the
-            # one that ended the round) before the caller can replay it
-            wait(pending)
             if prev_sp is not None:
                 self.spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
 
-    def _run_round_inner(self, pending: list) -> bool:
+    def _run_round_inner(self, pool: ThreadPoolExecutor) -> bool:
         """One round. Spark actions that do not depend on each other run
-        side by side on pool threads; their futures go into ``pending`` and
-        are all joined before the manifest commit."""
+        side by side on ``pool``: the Bloom merge beside the candidate
+        count; the deltas and compaction bases that read only `fetched` as
+        soon as the histogram collect has materialized it, while the
+        children pipeline computes; the rest after the enqueue counts. All
+        writes are joined before the single manifest commit, so a round
+        never commits with a write still running."""
         cfg = self.cfg
         manifest = self.store.read_manifest()
         version = manifest["current"]
@@ -1762,9 +1757,8 @@ class CrawlEngine:
         # (materialized by the histogram collect above) and frames cached
         # before it, so they run while the children pipeline below computes.
         # A crashed attempt's version directory is cleared once, before any
-        # base write starts. Every future the round starts goes into
-        # `pending`; all are joined before the manifest commit, and run_round
-        # waits for them when the round raises.
+        # base write starts. All writes are joined before the manifest
+        # commit.
         self.store.clear_version(rnd)
         append = self.store.write_append
         early = [
@@ -1787,7 +1781,7 @@ class CrawlEngine:
             early.append(partial(append, rnd, "tombstones", tomb_new))
         if hist.get("Processed", 0) > 0:
             early.append(partial(append, rnd, "docs", docs_new))
-        pending.extend(_start(early))
+        writes = [pool.submit(w) for w in early]
 
         # 7. children of Traversed pages (all selected-derived frames read
         # the persisted `fetched` — `selected` itself is never re-executed)
@@ -1953,10 +1947,7 @@ class CrawlEngine:
         # The merge reads only `fetched`, so it runs on a pool thread while
         # the candidate count fills the `uniq` cache.
         bloom_prev = self._load_bloom(version, manifest, seen)
-        (merging,) = _start(
-            [partial(bloom_prev.merged, newly_seen.select("url_hash"))]
-        )
-        pending.append(merging)
+        merging = pool.submit(bloom_prev.merged, newly_seen.select("url_hash"))
         n_cand = uniq.count()
         cand_broadcastable = n_cand <= cfg.dedup_broadcast_max
         bloom = merging.result()
@@ -2243,10 +2234,10 @@ class CrawlEngine:
             if ev_excl is not None:
                 excl = ev_excl.unionByName(excl)
             late.append(partial(append, rnd, "excluded", excl))
-        pending.extend(_start(late))
+        writes += [pool.submit(w) for w in late]
         # the durability point is the single manifest swap in commit(): it
         # runs only once every write of the round has finished
-        _join(pending)
+        _join(writes)
         tr.mark("state writes")
         # ingest bookkeeping: {staged filename → absorb round}. Files whose
         # absorb round is at or before the (new) frontier base pointer are
