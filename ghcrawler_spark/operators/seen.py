@@ -76,6 +76,10 @@ BROADCAST_MAX_BYTES = 64 << 20
 # (10^10 keys at 1% FPR ≈ 12 GB → ~188 shards of ≤64 MB, not 16 of 750 MB).
 SHARD_MAX_BYTES = 64 << 20
 SEED_EXPECTED_FLOOR = 4096  # per-shard capacity floor of a new crawl
+# A key batch (a round's child candidates, the suspects of a seen-set probe,
+# an admin requeue) up to this many rows confirms membership by broadcast
+# joins; above it, by a shuffle anti-join.
+CONFIRM_BROADCAST_MAX = 4_000_000
 
 _GOLDEN = np.uint64(0x9E3779B97F4A7C15)
 
@@ -546,7 +550,6 @@ def filter_unseen(
     key_col: str = "url_hash",
     persisted: list | None = None,
     confirm_broadcast: bool | None = None,
-    confirm_broadcast_max: int = 4_000_000,
 ) -> DataFrame:
     """Bloom-pushdown unseen filter: definite-unseen rows pass for free; only
     probe-positives (true dups + ~fpr false positives) hit the exact
@@ -597,7 +600,7 @@ def filter_unseen(
         # one count over the (persisted) probe output; its job doubles as the
         # cache fill, so downstream branches read blocks, not the pipeline
         confirm_broadcast = (
-            probed.filter(F.col("maybe_seen")).count() <= confirm_broadcast_max
+            probed.filter(F.col("maybe_seen")).count() <= CONFIRM_BROADCAST_MAX
         )
     if confirm_broadcast:
         hits = (

@@ -50,7 +50,6 @@ import os
 import time
 from concurrent.futures import ThreadPoolExecutor, wait
 from dataclasses import asdict, dataclass, field, replace
-from functools import partial
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -67,7 +66,7 @@ from ghcrawler_spark.operators.frontier_ops import (
     weighted_rotation_order_scalable,
 )
 from ghcrawler_spark.operators import seen as seen_set
-from ghcrawler_spark.operators.seen import filter_unseen
+from ghcrawler_spark.operators.seen import CONFIRM_BROADCAST_MAX, filter_unseen
 from ghcrawler_spark.plans.policy import (
     FETCH_POLICIES,
     FRESHNESS_POLICIES,
@@ -120,6 +119,10 @@ LINEAGE_SCHEMA = (
     "n_traversed long, n_requeued long, n_missing long, n_deferred long"
 )
 LINEAGE_BUCKETS = 32
+# outcomes that re-enqueue the url at the tail (attempt + 1)
+REQUEUE_CLASS = ("Requeued", "Throttled")
+# salt buckets of the hot-host politeness pre-cut and the trait caps
+POLITENESS_SALT = 16
 
 
 @dataclass
@@ -186,15 +189,7 @@ class CrawlConfig:
     # per (host, salt) before the exact per-host cumulative window, so the
     # window never sorts a whole hot host in one task (north_star: salted
     # repartitioning by host-hash). Cold hosts skip the extra pass entirely.
-    # politeness_salt=0 disables.
-    politeness_salt: int = 16
     politeness_hot_threshold: int | None = None
-    # child-dedup broadcast gate: a round's attenuated candidate batch below
-    # this row count confirms seen-set membership AND in-flight membership
-    # via broadcast semi/anti joins (the seen set and the frontier are
-    # unbounded — O(total crawled) — and are only ever scanned map-side, never
-    # exchanged). Above it, fall back to exact shuffle anti-joins.
-    dedup_broadcast_max: int = 4_000_000
     # round-scoped spark.sql.shuffle.partitions override (None = leave the
     # session value). A round's working set is bounded by round_capacity,
     # so its shuffles want partitions sized to THAT volume, not the
@@ -249,8 +244,7 @@ _RECONFIGURABLE = frozenset({
     "max_attempts", "max_rounds", "compute_costs", "trait_budgets",
     "type_traits", "bench_on_throttle", "bench_rounds", "measured_costs",
     "exclude_not_found", "bailed_retry", "inject_failures",
-    "politeness_salt", "politeness_hot_threshold", "dedup_broadcast_max",
-    "shuffle_partitions", "compact_every",
+    "politeness_hot_threshold", "shuffle_partitions", "compact_every",
 })
 
 
@@ -268,8 +262,15 @@ def inflight_bounce(batch: DataFrame, inflight_urls: DataFrame) -> DataFrame:
     return batch.join(F.broadcast(hits), "url", "left_anti")
 
 
-def _dedupe_batch_urls(rows: DataFrame) -> DataFrame:
-    """Intra-batch url dedup, first-wins by the resolved attribute tuple.
+# a request's resolved attribute tuple: the order that keeps one row of a
+# url a batch repeats (``ReferenceSimulator._request_sort_key`` is the twin)
+_REQUEST_ORDER = (
+    "type", "tier", "policy_fetch", "policy_freshness", "map_path", "map_name"
+)
+
+
+def _dedupe_batch_urls(rows: DataFrame, order_cols: tuple[str, ...]) -> DataFrame:
+    """Intra-batch url dedup, first-wins by ``order_cols``.
 
     The reference's tracked push tags a url on its FIRST push, so a second
     copy of the same url in the SAME batch bounces off the tag
@@ -278,16 +279,146 @@ def _dedupe_batch_urls(rows: DataFrame) -> DataFrame:
     AND make enqueue_seq nondeterministic (the rank-by-url has ties). The
     window partitions per url (group size = that url's duplicate count), so
     the exchange is an equi-hash of the BATCH by url — no global sort, and
-    the frontier is never touched. ``ReferenceSimulator._request_sort_key``
-    is the twin tie-break: both engines keep the same winner."""
-    w = Window.partitionBy("url").orderBy(
-        "type", "tier", "policy_fetch", "policy_freshness",
-        "map_path", "map_name",
-    )
+    the frontier is never touched."""
+    w = Window.partitionBy("url").orderBy(*order_cols)
     return (
         rows.withColumn("_dup_rn", F.row_number().over(w))
         .filter(F.col("_dup_rn") == 1)
         .drop("_dup_rn")
+    )
+
+
+def _root_rows(ranked: DataFrame, next_seq: int, **cols: Column) -> DataFrame:
+    """Frontier rows of requests with no parent (seeds, admin pushes,
+    absorbed events, revived deadletters): enqueue_seq = next_seq + the
+    `_rank` column, attempt 0, an empty history and a qualifier that
+    anchors the URN chain at the host entity (lib/request.js:106-117).
+    ``cols`` supplies a column by name in place of ``ranked``'s own;
+    payload_id is null unless given."""
+    cols.setdefault("payload_id", F.lit(None).cast("string"))
+
+    def c(name: str) -> Column:
+        return cols[name].alias(name) if name in cols else F.col(name)
+
+    return ranked.select(
+        c("url"),
+        c("type"),
+        c("tier"),
+        c("host"),
+        (F.lit(next_seq) + F.col("_rank")).cast("long").alias("enqueue_seq"),
+        F.lit(0).cast("int").alias("attempt"),
+        c("policy_fetch"),
+        c("policy_freshness"),
+        c("map_path"),
+        F.array().cast("array<string>").alias("history"),
+        c("payload_id"),
+        root_urn(F.lit("host"), cols.get("host", F.col("host"))).alias("qualifier"),
+        c("map_name"),
+    )
+
+
+def _deadletter_rows(
+    df: DataFrame,
+    rnd: int,
+    reason: str,
+    tier: Column | None = None,
+    attempt: Column | None = None,
+) -> DataFrame:
+    """Deadletter rows (url, type, tier, round, attempt, reason) of ``df``;
+    ``tier`` and ``attempt`` default to ``df``'s own columns. Callers with
+    malformed input blank its null url/type first (``fillna``)."""
+    return df.select(
+        "url",
+        "type",
+        (F.col("tier") if tier is None else tier).alias("tier"),
+        F.lit(rnd).alias("round"),
+        (F.col("attempt") if attempt is None else attempt).cast("int").alias("attempt"),
+        F.lit(reason).alias("reason"),
+    )
+
+
+def _cost_col(cfg: CrawlConfig) -> Column:
+    """A row's politeness cost: its type's compute cost, 1 when unlisted
+    (computeLimiter.js:27-77; unit costs degenerate to rank <= level)."""
+    if not cfg.compute_costs:
+        return F.lit(1)
+    pairs = [x for t, c in cfg.compute_costs.items() for x in (F.lit(t), F.lit(int(c)))]
+    return F.coalesce(F.element_at(F.create_map(*pairs), F.col("type")), F.lit(1))
+
+
+def _child_rows(src: DataFrame, grp: int) -> DataFrame:
+    """Enqueue-batch rows (group ``grp``, ordered by parent pop) of child
+    candidates: children inherit the winning parent's policy and the map
+    path descends one step (traversalPolicy.js:154-160) — EXCEPT page rows,
+    which keep the parent's own path + qualifier (the page is the same
+    logical resource)."""
+    return src.select(
+        "url",
+        "type",
+        F.when(
+            F.col("_is_page") | (F.col("edge") == "images"), "soon"
+        ).otherwise("normal").alias("tier"),
+        "host",
+        F.lit(0).cast("int").alias("attempt"),
+        F.lit(grp).alias("_grp"),
+        F.col("parent_pop").cast("long").alias("_ord"),
+        F.col("p_fetch").alias("policy_fetch"),
+        F.col("p_fresh").alias("policy_freshness"),
+        F.when(F.col("_is_page"), F.col("p_map"))
+        .otherwise(next_map_path(F.col("p_map"), F.col("edge")))
+        .alias("map_path"),
+        F.col("p_history").alias("history"),
+        F.lit(None).cast("string").alias("payload_id"),
+        F.when(F.col("_is_page"), F.col("p_qualifier"))
+        .otherwise(F.col("p_urn"))
+        .alias("qualifier"),
+        F.col("p_map_name").alias("map_name"),
+        F.col("_ndup").cast("long").alias("_ndup"),
+    )
+
+
+def _assign_enqueue_seq(rows: DataFrame, next_seq: int) -> DataFrame:
+    """enqueue_seq = next_seq + the distributed rank of ``rows`` over
+    (_grp, _ord, url), each group ranked on its own from 1 on top of the
+    groups before it (group 1 after group 0; group 2 alone) — with NO
+    global Window.orderBy over the rows (which would sort the whole enqueue
+    batch in ONE task) and no driver collect of row-level data. _ord is a
+    parent pop_seq (≤ round_capacity distinct values): prefix offsets are a
+    running sum over the tiny (_grp, _ord) COUNTS table, group 1's base
+    offset (= group 0's total) rides a broadcast 1-row aggregate instead of
+    a driver collect, and the final rank is a window per (_grp, _ord) whose
+    sort is bounded by a single parent's fan-out."""
+    counts = rows.groupBy("_grp", "_ord").agg(F.count(F.lit(1)).alias("_cnt"))
+    w_off = (
+        Window.partitionBy("_grp")
+        .orderBy("_ord")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    g0_total = counts.agg(
+        F.coalesce(
+            F.sum(F.when(F.col("_grp") == 0, F.col("_cnt"))), F.lit(0)
+        ).alias("_g0")
+    )
+    offs = (
+        counts.withColumn(
+            "_poff", F.coalesce(F.sum("_cnt").over(w_off), F.lit(0))
+        )
+        .crossJoin(F.broadcast(g0_total))
+        .withColumn(
+            "_off",
+            F.col("_poff")
+            + F.when(F.col("_grp") == 1, F.col("_g0")).otherwise(F.lit(0)),
+        )
+    )
+    w_enq = Window.partitionBy("_grp", "_ord").orderBy("url")
+    return (
+        rows.join(offs.select("_grp", "_ord", "_off"), ["_grp", "_ord"])
+        .withColumn(
+            "enqueue_seq",
+            (F.lit(next_seq) + F.col("_off") + F.row_number().over(w_enq))
+            .cast("long"),
+        )
+        .drop("_off")
     )
 
 
@@ -368,6 +499,95 @@ def _run_writes(writes: list) -> None:
     """Run independent write jobs concurrently (wall = slowest, not sum)."""
     with ThreadPoolExecutor(max_workers=len(writes)) as pool:
         _join([pool.submit(w) for w in writes])
+
+
+@dataclass
+class _Round:
+    """One crawl round's state, handed from phase to phase
+    (``CrawlEngine._run_round_inner``). The first block is fixed when the
+    round opens; each later block is set by the phase it names."""
+
+    manifest: dict
+    bases: dict
+    pending_files: list
+    pool: ThreadPoolExecutor
+    spark: SparkSession
+    version: int = field(init=False)
+    rnd: int = field(init=False)
+    next_seq: int = field(init=False)  # + the absorbed events (_load_round)
+    tr: _Tracer = field(init=False)
+    persisted: list = field(default_factory=list)  # unpersisted after commit
+    writes: list = field(default_factory=list)  # joined before the commit
+    # _load_round
+    frontier: DataFrame | None = None
+    mor_frontier: DataFrame | None = None
+    ingested: DataFrame | None = None
+    n_ingested: int = 0
+    ev_dead: DataFrame | None = None
+    ev_excl: DataFrame | None = None
+    tomb_new: DataFrame | None = None
+    n_tomb: int = 0
+    seen: DataFrame | None = None
+    host_state: DataFrame | None = None
+    # _select
+    levels: DataFrame | None = None
+    host_stats: DataFrame | None = None
+    dead: DataFrame | None = None
+    eligible: DataFrame | None = None
+    n_dead: int = 0
+    n_deferred: int = 0
+    selected: DataFrame | None = None
+    # _fetch
+    fetched: DataFrame | None = None
+    hist: dict | None = None
+    n_selected: int = 0
+    n_requeued: int = 0
+    round_min: int | None = None
+    stored_lookup: DataFrame | None = None
+    tomb_lookup: DataFrame | None = None
+    # _write_early
+    newly_seen: DataFrame | None = None
+    seen_next: DataFrame | None = None
+    compacting: bool = False
+    new_bases: dict | None = None
+    n_dl_extra: int = 0
+    # _enqueue
+    remaining: DataFrame | None = None
+    bloom_prev: object = None
+    bloom: object = None
+    bloom_total: int = 0
+    fresh: DataFrame | None = None
+    fresh_denied: DataFrame | None = None
+    new_rows: DataFrame | None = None
+    new_rows_clean: DataFrame | None = None
+    n_children: int = 0
+    n_bounced: int = 0
+    n_attenuated: int = 0
+
+    def __post_init__(self):
+        self.version = self.manifest["current"]
+        self.rnd = self.manifest["round"] + 1
+        self.next_seq = self.manifest["next_seq"]
+        self.tr = _Tracer(f"round {self.rnd}", self.spark)
+
+    def submit(self, desc: str, fn, *args):
+        """Run ``fn(*args)`` on the round's pool with its Spark jobs
+        described as ``desc`` (the event log and UI show the description;
+        a pool thread's own call site reads ``<unknown>:0``)."""
+        sc = self.spark.sparkContext
+
+        def described():
+            sc.setJobDescription(desc)
+            try:
+                return fn(*args)
+            finally:
+                sc.setJobDescription(None)
+
+        return self.pool.submit(described)
+
+    def write(self, desc: str, fn, *args) -> None:
+        """``submit`` a state write; the round joins it before the commit."""
+        self.writes.append(self.submit(desc, fn, *args))
 
 
 class CrawlEngine:
@@ -454,7 +674,8 @@ class CrawlEngine:
         old store works — the row behaves like a fresh root (its URN chain
         re-anchors at the host, lib/request.js:106-117)."""
         df = self.store.read_merged(
-            self.spark, "frontier", version, bases["frontier"], key_col="enqueue_seq"
+            self.spark, "frontier", version, bases["frontier"],
+            key_col="enqueue_seq", merge_schema=True,
         )
         for c in ("qualifier", "map_name"):
             if c not in df.columns:
@@ -467,63 +688,41 @@ class CrawlEngine:
         ).withColumn("map_name", F.coalesce(F.col("map_name"), F.lit("default")))
 
     def _read_seen(self, version: int, bases: dict) -> DataFrame:
-        base_v = bases.get("seen")
-        if base_v is None:
-            return self.store.read_appends(self.spark, "seen", version)
-        out = self.store.read(self.spark, "seen", base_v)
-        try:
-            deltas = self.store.read_appends(
-                self.spark, "seen", version, from_version=base_v + 1
-            )
-            out = out.unionByName(deltas)
-        except FileNotFoundError:
-            pass
-        return out
+        return self.store.read_merged(
+            self.spark, "seen", version, bases.get("seen"), deltas="seen"
+        )
 
     def _read_stored(self, version: int, bases: dict) -> DataFrame:
         """Doc-store POINT-LOOKUP view (url → latest stored round/version) —
         the reference's store.get/etag index (storageDocStore.js:61-93 keys
         docs for lookup; it never replays its change log). Merge-on-read:
         the compacted `stored` base ∪ docs deltas SINCE the base, so a round
-        unions ≤ compact_every+1 dirs instead of every docs delta since v0."""
-        base_v = bases.get("stored")
-        if base_v is None:  # legacy layout: no compacted lookup yet
-            rows = self.store.read_appends(self.spark, "docs", version).select(
-                "url", "round", "version"
-            )
-        else:
-            rows = self.store.read(self.spark, "stored", base_v)
-            try:
-                deltas = self.store.read_appends(
-                    self.spark, "docs", version, from_version=base_v + 1,
-                    merge_schema=True,
-                )
-                rows = rows.unionByName(deltas.select("url", "round", "version"))
-            except FileNotFoundError:
-                pass
+        unions ≤ compact_every+1 dirs instead of every docs delta since v0
+        (a legacy store without a `stored` base reads every docs delta)."""
+        rows = self.store.read_merged(
+            self.spark, "stored", version, bases.get("stored"), deltas="docs",
+            merge_schema=True,
+        )
         return rows.groupBy("url").agg(
             F.max("round").alias("round"), F.max("version").alias("version")
         )
 
     def _read_host_state(self, version: int, bases: dict) -> DataFrame:
         """Token-bucket table, merge-on-read: base ∪ per-round deltas of
-        CHANGED hosts only, latest row per host wins. Keeps the per-round
-        write O(active hosts) instead of O(all known hosts)."""
+        CHANGED hosts only, latest row per host wins (the base, which has no
+        round column, loses to every delta). Keeps the per-round write
+        O(active hosts) instead of O(all known hosts)."""
         base_v = bases.get("host_state")
         if base_v is None:  # legacy layout: full table per version
             return self.store.read(self.spark, "host_state", version)
-        base = self.store.read(self.spark, "host_state", base_v).withColumn(
-            "_hs_r", F.lit(base_v)
-        )
-        try:
-            deltas = self.store.read_appends(
-                self.spark, "host_state_adds", version, from_version=base_v + 1
-            ).withColumnRenamed("round", "_hs_r")
-            base = base.unionByName(deltas)
-        except FileNotFoundError:
-            pass
-        return base.groupBy("host").agg(
-            F.max_by(F.struct("level", "bench_until"), "_hs_r").alias("_s")
+        rows = self.store.read_merged(self.spark, "host_state", version, base_v)
+        if "round" not in rows.columns:  # no delta past the base
+            rows = rows.withColumn("round", F.lit(base_v))
+        return rows.groupBy("host").agg(
+            F.max_by(
+                F.struct("level", "bench_until"),
+                F.coalesce(F.col("round"), F.lit(base_v)),
+            ).alias("_s")
         ).select(
             "host",
             F.col("_s.level").alias("level"),
@@ -531,18 +730,9 @@ class CrawlEngine:
         )
 
     def _read_deadletter(self, version: int, bases: dict) -> DataFrame:
-        out = self.store.read(self.spark, "deadletter", bases["deadletter"])
-        try:
-            adds = self.store.read_appends(
-                self.spark,
-                "deadletter_adds",
-                version,
-                from_version=bases["deadletter"] + 1,
-            )
-            out = out.unionByName(adds)
-        except FileNotFoundError:
-            pass
-        return out
+        return self.store.read_merged(
+            self.spark, "deadletter", version, bases["deadletter"]
+        )
 
     # -- event ingest (ROUND SPEC v2 step 0) ----------------------------------
 
@@ -561,15 +751,7 @@ class CrawlEngine:
             if f.endswith(".parquet") and not f.startswith((".", "_")) and f not in done
         )
 
-    def _absorb_events(
-        self,
-        rnd: int,
-        next_seq: int,
-        files: list[str],
-        frontier: DataFrame,
-        persisted: list,
-        version: int = 0,
-    ):
+    def _absorb_events(self, r: _Round) -> None:
         """Absorb staged webhook events into the 'events' tier (weight 10,
         crawlerFactory.js:86,680-685): malformed → deadletter (F3), robots →
         excluded, first occurrence per url wins, in-flight urls dropped
@@ -583,10 +765,11 @@ class CrawlEngine:
         against the docs log; unresolvable directives are dropped, url-less
         key-less ones deadletter as 'malformed'.
 
-        Returns (ingested_df|None, n_ingested, deadletter_rows|None,
-        excluded_rows|None, tomb_rows|None, n_tomb)."""
+        Sets r.ingested (persisted) and n_ingested, r.ev_dead and ev_excl
+        (deadletter and excluded rows) and r.tomb_new and n_tomb."""
+        files, rnd = r.pending_files, r.rnd
         if not files:
-            return None, 0, None, None, None, 0
+            return
         # mergeSchema: a staging dir can mix pre-upgrade batches (no
         # `verified` column) with new ones — a single-footer read would
         # either drop the column or read legacy rows as null; null-verified
@@ -597,54 +780,36 @@ class CrawlEngine:
             *[os.path.join(self.cfg.ingest_dir, f) for f in files]
         )
         have = set(ev.columns)
+
+        def optional(name: str, type_: str, default=None) -> Column:
+            """``name`` as ``type_``; ``default`` where absent or null."""
+            c = (F.col(name) if name in have else F.lit(default)).cast(type_)
+            return (c if default is None else F.coalesce(c, F.lit(default))).alias(name)
+
         ev = ev.select(
             "url",
             "type",
-            (F.col("action") if "action" in have else F.lit(None))
-            .cast("string")
-            .alias("action"),
-            F.coalesce(
-                (F.col("event_ms") if "event_ms" in have else F.lit(0)).cast(
-                    "long"
-                ),
-                F.lit(0),
-            ).alias("event_ms"),
-            (F.col("payload_id") if "payload_id" in have else F.lit(None))
-            .cast("string")
-            .alias("payload_id"),
-            F.coalesce(
-                (F.col("verified") if "verified" in have else F.lit(True)).cast(
-                    "boolean"
-                ),
-                F.lit(True),
-            ).alias("verified"),
+            optional("action", "string"),
+            optional("event_ms", "long", 0),
+            optional("payload_id", "string"),
+            optional("verified", "boolean", True),
             # v5 streaming front-end unification: the event-source limiter
             # (attach_event_stream rate_per_sec) stages over-rate rows with
             # throttled=true; they enter the LOW-priority 'later' tier
             # instead of 'events' (lib/crawler.js:441-459 requeue shape)
-            F.coalesce(
-                (
-                    F.col("throttled") if "throttled" in have else F.lit(False)
-                ).cast("boolean"),
-                F.lit(False),
-            ).alias("throttled"),
+            optional("throttled", "boolean", False),
         )
 
         def _dead_rows(df: DataFrame, reason: str) -> DataFrame:
-            return df.select(
-                F.coalesce(F.col("url"), F.lit("")).alias("url"),
-                F.coalesce(F.col("type"), F.lit("")).alias("type"),
-                F.lit("events").alias("tier"),
-                F.lit(rnd).alias("round"),
-                F.lit(0).cast("int").alias("attempt"),
-                F.lit(reason).alias("reason"),
+            return _deadletter_rows(
+                df.fillna("", ["url", "type"]), rnd, reason,
+                tier=F.lit("events"), attempt=F.lit(0),
             )
 
         # signature gate FIRST (routes/webhook.js:15-24 rejects before
         # parsing): staged rows the producer could not verify → deadletter
         ev_dead = _dead_rows(ev.filter(~F.col("verified")), "unverified")
         ev = ev.filter(F.col("verified")).drop("verified")
-        tomb_rows, n_tomb = None, 0
         if self.cfg.tombstones:
             is_del = F.coalesce(F.col("action") == "deleted", F.lit(False))
             dels = ev.filter(is_del)
@@ -672,7 +837,7 @@ class CrawlEngine:
             if dels_k.limit(1).count() > 0:
                 try:
                     docs_log = self.store.read_appends(
-                        self.spark, "docs", version, merge_schema=True
+                        self.spark, "docs", r.version, merge_schema=True
                     )
                     latest = docs_log.groupBy("image_id").agg(
                         F.max(F.struct("round", "url")).alias("_m")
@@ -688,10 +853,10 @@ class CrawlEngine:
                 .select("url", F.lit(rnd).cast("int").alias("round"))
                 .persist()
             )
-            persisted.append(tomb_rows)
-            n_tomb = tomb_rows.count()
-            if n_tomb == 0:
-                tomb_rows = None
+            r.persisted.append(tomb_rows)
+            r.n_tomb = tomb_rows.count()
+            if r.n_tomb:
+                r.tomb_new = tomb_rows
             ev_dead = ev_dead.unionByName(
                 _dead_rows(dels.filter(~url_ok & ~keyed), "malformed")
             )
@@ -708,42 +873,30 @@ class CrawlEngine:
                 )
             )
         ok = ok.drop("action")
-        w = Window.partitionBy("url").orderBy("event_ms", "type")
         first = (
-            ok.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "event_ms")
+            _dedupe_batch_urls(ok, ("event_ms", "type"))
+            .drop("event_ms")
             .withColumn("host", extract_host(F.col("url")))
         )
         allowed, denied = self._robots_allowed(first)
-        ev_excl = denied.select("url", F.lit(rnd).alias("round"))
-        fresh = allowed.join(frontier.select("url"), "url", "left_anti")
+        r.ev_excl = denied.select("url", F.lit(rnd).alias("round"))
+        r.ev_dead = ev_dead
+        fresh = allowed.join(r.frontier.select("url"), "url", "left_anti")
         pf, fresh_policy, mp = EVENT_POLICY
-        ranked, n_ingested = scalable_rank_by_key_with_total(
-            fresh, ["url"], "_rank", persisted=persisted
+        ranked, r.n_ingested = scalable_rank_by_key_with_total(
+            fresh, ["url"], "_rank", persisted=r.persisted
         )
-        ingested = (
-            ranked.select(
-                "url",
-                "type",
-                F.when(F.col("throttled"), "later")
-                .otherwise("events")
-                .alias("tier"),
-                "host",
-                (F.lit(next_seq) + F.col("_rank")).cast("long").alias("enqueue_seq"),
-                F.lit(0).cast("int").alias("attempt"),
-                F.lit(pf).alias("policy_fetch"),
-                F.lit(fresh_policy).alias("policy_freshness"),
-                F.lit(mp).alias("map_path"),
-                F.array().cast("array<string>").alias("history"),
-                "payload_id",
-                root_urn(F.lit("host"), F.col("host")).alias("qualifier"),
-                F.lit("default").alias("map_name"),
-            )
-            .persist()
-        )
-        persisted.append(ingested)
-        return ingested, n_ingested, ev_dead, ev_excl, tomb_rows, n_tomb
+        r.ingested = _root_rows(
+            ranked,
+            r.next_seq,
+            tier=F.when(F.col("throttled"), "later").otherwise("events"),
+            policy_fetch=F.lit(pf),
+            policy_freshness=F.lit(fresh_policy),
+            map_path=F.lit(mp),
+            payload_id=F.col("payload_id"),
+            map_name=F.lit("default"),
+        ).persist()
+        r.persisted.append(r.ingested)
 
     def current_frontier(self) -> DataFrame:
         """The live frontier view at the committed manifest version."""
@@ -920,7 +1073,6 @@ class CrawlEngine:
             "type",
             F.coalesce(F.col("tier"), F.lit("normal")).alias("tier"),
             extract_host("url").alias("host"),
-            F.lit(0).alias("attempt"),
             "policy_fetch",
             "policy_freshness",
             "map_path",
@@ -929,31 +1081,15 @@ class CrawlEngine:
         allowed, denied = self._robots_allowed(base)
         # a seed list repeating a url keeps ONE row (tracked-push tag
         # semantics; also what makes the rank-by-url below deterministic)
-        allowed = _dedupe_batch_urls(allowed)
+        allowed = _dedupe_batch_urls(allowed, _REQUEST_ORDER)
         # enqueue_seq = rank by url — via the range-partitioned distributed
         # rank, NOT a global Window.orderBy (a 10^10-URL seed list would sort
         # in one task)
         persisted: list = []
         ranked, n_seeded = scalable_rank_by_key_with_total(
-            allowed, ["url"], "enqueue_seq", persisted=persisted
+            allowed, ["url"], "_rank", persisted=persisted
         )
-        frontier = ranked.select(
-            "url",
-            "type",
-            "tier",
-            "host",
-            "enqueue_seq",
-            F.col("attempt").cast("int"),
-            "policy_fetch",
-            "policy_freshness",
-            "map_path",
-            F.array().cast("array<string>").alias("history"),
-            F.lit(None).cast("string").alias("payload_id"),
-            # root rows anchor the URN chain at the host entity
-            # (lib/request.js:106-117)
-            root_urn(F.lit("host"), F.col("host")).alias("qualifier"),
-            "map_name",
-        )
+        frontier = _root_rows(ranked, 0)
         # v0 holds the BASE tables of the merge-on-read model; rounds write
         # only adds/removes deltas until a compaction moves the base pointer
         self.store.clear_version(0)
@@ -963,13 +1099,9 @@ class CrawlEngine:
                 "frontier": frontier,
                 "host_state": self._empty(HOST_STATE_SCHEMA),
                 "stored": self._empty(STORED_SCHEMA),
-                "deadletter": malformed.select(
-                    F.coalesce(F.col("url"), F.lit("")).alias("url"),
-                    F.coalesce(F.col("type"), F.lit("")).alias("type"),
-                    F.col("_tier_raw").alias("tier"),
-                    F.lit(0).alias("round"),
-                    F.lit(0).cast("int").alias("attempt"),
-                    F.lit("malformed").alias("reason"),
+                "deadletter": _deadletter_rows(
+                    malformed.fillna("", ["url", "type"]), 0, "malformed",
+                    tier=F.col("_tier_raw"), attempt=F.lit(0),
                 ),
             },
         )
@@ -1037,66 +1169,71 @@ class CrawlEngine:
                 self.spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
 
     def _run_round_inner(self, pool: ThreadPoolExecutor) -> bool:
-        """One round. Spark actions that do not depend on each other run
-        side by side on ``pool``: the Bloom merge beside the candidate
-        count; the deltas and compaction bases that read only `fetched` as
-        soon as the histogram collect has materialized it, while the
-        children pipeline computes; the rest after the enqueue counts. All
-        writes are joined before the single manifest commit, so a round
-        never commits with a write still running."""
-        cfg = self.cfg
+        """One round: six phases over one `_Round` context, in this order —
+        load and absorb events, politeness and rotation, select + fetch +
+        the outcome histogram, early writes, children + seen-set merge +
+        enqueue, late writes and commit. Spark actions that do not depend
+        on each other run side by side on ``pool``: the early writes (deltas
+        and compaction bases that read only `fetched`) and the Bloom merge
+        run while the children pipeline computes. All writes are joined
+        before the single manifest commit, so a round never commits with a
+        write still running."""
         manifest = self.store.read_manifest()
-        version = manifest["current"]
-        rnd = manifest["round"] + 1
-        next_seq = manifest["next_seq"]
-        total_popped = manifest["total_popped"]
-
         # frontier emptiness is a manifest scalar — no probe job; a pending
         # event batch still wakes an empty frontier (webhook → events tier)
         pending_files = self._pending_event_files(manifest)
         if manifest.get("frontier_size", 1) == 0 and not pending_files:
             return False
-        persisted: list = []  # frames to unpersist once the round commits
-        tr = _Tracer(f"round {rnd}", self.spark)
-        bases = self._bases(manifest)
+        r = _Round(manifest, self._bases(manifest), pending_files, pool, self.spark)
+        for phase in (
+            self._load_round,
+            self._select,
+            self._fetch,
+            self._write_early,
+            self._enqueue,
+            self._commit_round,
+        ):
+            phase(r)
+            r.tr.mark(phase.__name__.lstrip("_"))
+        return True
+
+    def _load_round(self, r: _Round) -> None:
+        """Phase 1, load and absorb events (ROUND SPEC v2 step 0). Reads the
+        committed MOR frontier, seen set and host state, and the staged
+        event batches. Materializes (persist) the MOR frontier, host_state
+        and, on an event round, the absorbed rows and the frontier ∪ them
+        as one relation. Frees nothing."""
         # persist the merged frontier view: the event absorb and half a dozen
         # downstream frames (hosts, dead, eligible, remaining, ...) scan it,
         # and the merge-on-read union+anti-join is no free parquet re-read
-        frontier = self._read_frontier(version, bases).persist()
-        persisted.append(frontier)
-        # 0. event ingest: absorb staged webhook batches into the events tier
-        # (weight 10) before selection — ROUND SPEC v2 step 0 (v5: deletion
-        # directives split out as tombstone rows)
-        ingested, n_ingested, ev_dead, ev_excl, tomb_new, n_tomb = (
-            self._absorb_events(
-                rnd, next_seq, pending_files, frontier, persisted, version
-            )
-        )
-        mor_frontier = frontier
-        if ingested is not None:
+        r.frontier = r.mor_frontier = self._read_frontier(r.version, r.bases).persist()
+        r.persisted.append(r.frontier)
+        # absorb staged webhook batches into the events tier (weight 10)
+        # before selection (v5: deletion directives split out as tombstones)
+        self._absorb_events(r)
+        if r.ingested is not None:
             # cached again as ONE relation: over a union of two cached scans
             # the rotation and children plans each run more query stages.
             # Built from the two caches (no parquet re-read); the MOR read's
-            # cache is dropped once the host stats below have filled it.
-            frontier = frontier.unionByName(ingested).persist()
-            persisted.append(frontier)
-            next_seq += n_ingested
-        seen = self._read_seen(version, bases)
+            # cache is dropped once the host stats have filled it (_select).
+            r.frontier = r.frontier.unionByName(r.ingested).persist()
+            r.persisted.append(r.frontier)
+            r.next_seq += r.n_ingested
+        r.seen = self._read_seen(r.version, r.bases)
         # persist: read twice (refill join + changed-host delta detection)
-        host_state = self._read_host_state(version, bases).persist()
-        persisted.append(host_state)
+        r.host_state = self._read_host_state(r.version, r.bases).persist()
+        r.persisted.append(r.host_state)
 
-        # politeness cost column (computeLimiter.js:27-77; unit costs
-        # degenerate to rank<=level) — defined early so the step-1
-        # aggregation can also total it per host
-        if cfg.compute_costs:
-            pairs = [x for t, c in cfg.compute_costs.items() for x in (F.lit(t), F.lit(int(c)))]
-            cost_col = F.coalesce(
-                F.element_at(F.create_map(*pairs), F.col("type")), F.lit(1)
-            )
-        else:
-            cost_col = F.lit(1)
-
+    def _select(self, r: _Round) -> None:
+        """Phase 2, politeness and rotation: bucket refill, deadletter
+        split, per-host budgets, trait caps and the weighted rotation that
+        picks the round's pops. Reads r.frontier and r.host_state.
+        Materializes (persist) the per-host counts and stats (one collect
+        fills both) and the rotation's bucket counts. Frees the MOR
+        frontier cache on an event round (the union replaces it). Sets
+        r.selected: the popped frontier rows with pop_seq, not computed."""
+        cfg, rnd, frontier = self.cfg, r.rnd, r.frontier
+        cost_col = _cost_col(cfg)
         # 1. refill token buckets for all known + current hosts
         #    (first-seen hosts start at capacity). ONE full-frontier
         #    aggregation serves the distinct-host list here, the hot-host
@@ -1113,9 +1250,9 @@ class CrawlEngine:
             )
             .persist()
         )
-        persisted.append(host_counts)
+        r.persisted.append(host_counts)
         hosts = host_counts.select("host")
-        levels = hosts.join(host_state, "host", "full_outer").select(
+        r.levels = levels = hosts.join(r.host_state, "host", "full_outer").select(
             "host",
             F.least(
                 F.lit(cfg.bucket_capacity),
@@ -1129,8 +1266,8 @@ class CrawlEngine:
         )
 
         # 2. deadletter split
-        dead = frontier.filter(F.col("attempt") > cfg.max_attempts)
-        eligible = frontier.filter(F.col("attempt") <= cfg.max_attempts)
+        r.dead = frontier.filter(F.col("attempt") > cfg.max_attempts)
+        r.eligible = frontier.filter(F.col("attempt") <= cfg.max_attempts)
 
         # 3. politeness: benched hosts withheld (tokenFactory.js:41-93);
         # per-host budget = bucket level consumed by COMPUTE COST.
@@ -1150,7 +1287,7 @@ class CrawlEngine:
         # 5 columns the stages read; the winners re-join their full rows
         # AFTER selection via a broadcast of the (enqueue_seq, pop_seq)
         # keys (bounded by round_capacity), so no wide row ever exchanges.
-        sel_input = eligible.select("enqueue_seq", "url", "type", "tier", "host")
+        sel_input = r.eligible.select("enqueue_seq", "url", "type", "tier", "host")
         if self._url_rank is not None:
             # v5 rank_priority: per-host politeness order becomes
             # (rank DESC, enqueue_seq) — graph-important urls win the budget
@@ -1169,18 +1306,15 @@ class CrawlEngine:
         # politeness short-circuit (n_over), the deadletter count (n_dead,
         # previously its own agg) and the Deferred count (eligible rows of
         # benched hosts, crawler.js:512-515) — three scalars, one collect.
-        host_stats = levels.join(
+        r.host_stats = host_stats = levels.join(
             host_counts.select("host", "count", "_tot_cost", "_n_dead"),
             "host",
             "left",
         ).persist()
-        persisted.append(host_stats)
+        r.persisted.append(host_stats)
+        over = F.coalesce(F.col("_tot_cost"), F.lit(0)) > F.col("level")
         srow = host_stats.agg(
-            F.sum(
-                (
-                    F.coalesce(F.col("_tot_cost"), F.lit(0)) > F.col("level")
-                ).cast("long")
-            ).alias("n_over"),
+            F.sum(over.cast("long")).alias("n_over"),
             F.sum("_n_dead").alias("n_dead"),
             F.sum(
                 F.when(
@@ -1191,14 +1325,11 @@ class CrawlEngine:
             ).alias("n_deferred"),
         ).first()
         n_over = int(srow["n_over"] or 0)
-        n_dead = int(srow["n_dead"] or 0)
-        n_deferred = int(srow["n_deferred"] or 0)
-        if mor_frontier is not frontier:
-            mor_frontier.unpersist()
-        over_hosts = host_stats.filter(
-            F.coalesce(F.col("_tot_cost"), F.lit(0)) > F.col("level")
-        ).select("host")
-        tr.mark("politeness (fused host stats)")
+        r.n_dead = int(srow["n_dead"] or 0)
+        r.n_deferred = int(srow["n_deferred"] or 0)
+        if r.mor_frontier is not frontier:
+            r.mor_frontier.unpersist()
+        over_hosts = host_stats.filter(over).select("host")
         if n_over == 0:
             under_rows = budgeted.drop("level", "bench_until")
             budgeted = budgeted.limit(0)
@@ -1207,47 +1338,46 @@ class CrawlEngine:
                 "level", "bench_until"
             )
             budgeted = budgeted.join(over_hosts, "host", "left_semi")
-        if cfg.politeness_salt:
-            # ADAPTIVE SALTED two-phase top-k (kills hot-host window skew):
-            # detect hosts past the hot threshold with one partial-agg count,
-            # then pre-cut ONLY their rows per (host, salt) to the top
-            # bucket_capacity by enqueue_seq. Exact: the true budget prefix
-            # (<= bucket_capacity rows, costs >= 1) is among the host's
-            # capacity smallest enqueue_seqs, hence inside every salt
-            # bucket's top-capacity. The cumulative window below then sorts
-            # <= capacity x politeness_salt rows for hot hosts and cold
-            # hosts pay nothing beyond the count.
-            hot_threshold = (
-                cfg.politeness_hot_threshold
-                if cfg.politeness_hot_threshold is not None
-                else cfg.bucket_capacity * 64
+        # ADAPTIVE SALTED two-phase top-k (kills hot-host window skew):
+        # detect hosts past the hot threshold with one partial-agg count,
+        # then pre-cut ONLY their rows per (host, salt) to the top
+        # bucket_capacity by enqueue_seq. Exact: the true budget prefix
+        # (<= bucket_capacity rows, costs >= 1) is among the host's
+        # capacity smallest enqueue_seqs, hence inside every salt
+        # bucket's top-capacity. The cumulative window below then sorts
+        # <= capacity x POLITENESS_SALT rows for hot hosts and cold
+        # hosts pay nothing beyond the count.
+        hot_threshold = (
+            cfg.politeness_hot_threshold
+            if cfg.politeness_hot_threshold is not None
+            else cfg.bucket_capacity * 64
+        )
+        # reuse the step-1 per-host counts (one cached scan) — counting
+        # `budgeted` would re-run the whole merge-on-read + bucket-join
+        # pipeline a second time
+        hot = host_counts.filter(F.col("count") > hot_threshold).select(
+            F.col("host").alias("_hot_host")
+        )
+        marked = budgeted.join(
+            F.broadcast(hot), budgeted.host == F.col("_hot_host"), "left"
+        )
+        cold = marked.filter(F.col("_hot_host").isNull()).drop("_hot_host")
+        w_pre = Window.partitionBy("host", "_salt").orderBy(*polite_order)
+        pruned_hot = (
+            marked.filter(F.col("_hot_host").isNotNull())
+            .drop("_hot_host")
+            .withColumn(
+                "_salt",
+                F.pmod(
+                    F.xxhash64(F.col("host"), F.col("url")),
+                    F.lit(POLITENESS_SALT),
+                ),
             )
-            # reuse the step-1 per-host counts (one cached scan) — counting
-            # `budgeted` would re-run the whole merge-on-read + bucket-join
-            # pipeline a second time
-            hot = host_counts.filter(F.col("count") > hot_threshold).select(
-                F.col("host").alias("_hot_host")
-            )
-            marked = budgeted.join(
-                F.broadcast(hot), budgeted.host == F.col("_hot_host"), "left"
-            )
-            cold = marked.filter(F.col("_hot_host").isNull()).drop("_hot_host")
-            w_pre = Window.partitionBy("host", "_salt").orderBy(*polite_order)
-            pruned_hot = (
-                marked.filter(F.col("_hot_host").isNotNull())
-                .drop("_hot_host")
-                .withColumn(
-                    "_salt",
-                    F.pmod(
-                        F.xxhash64(F.col("host"), F.col("url")),
-                        F.lit(cfg.politeness_salt),
-                    ),
-                )
-                .withColumn("_pre", F.row_number().over(w_pre))
-                .filter(F.col("_pre") <= cfg.bucket_capacity)
-                .drop("_salt", "_pre")
-            )
-            budgeted = cold.unionByName(pruned_hot)
+            .withColumn("_pre", F.row_number().over(w_pre))
+            .filter(F.col("_pre") <= cfg.bucket_capacity)
+            .drop("_salt", "_pre")
+        )
+        budgeted = cold.unionByName(pruned_hot)
         w_cum = (
             Window.partitionBy("host")
             .orderBy(*polite_order)
@@ -1266,10 +1396,7 @@ class CrawlEngine:
         # salted two-phase top-k (no one-task sort of the full polite set)
         if cfg.trait_budgets:
             polite = trait_cap(
-                polite,
-                cfg.trait_budgets,
-                cfg.type_traits,
-                salt=cfg.politeness_salt,
+                polite, cfg.trait_budgets, cfg.type_traits, salt=POLITENESS_SALT
             )
 
         # 4. weighted rotation + round capacity (closed-form interleave —
@@ -1281,8 +1408,8 @@ class CrawlEngine:
             "tier",
             "enqueue_seq",
             cfg.tier_weights,
-            bounds=(1, max(1, next_seq)),
-            persisted=persisted,
+            bounds=(1, max(1, r.next_seq)),
+            persisted=r.persisted,
         )
         selected_keys = ordered.filter(
             F.col("pop_seq") <= cfg.round_capacity
@@ -1294,31 +1421,37 @@ class CrawlEngine:
             selected_keys = F.broadcast(selected_keys)
         # _cost re-derived on the full rows (same pure type→cost expression
         # the politeness budget used; the slim path dropped its copy)
-        selected = frontier.join(selected_keys, "enqueue_seq").withColumn(
+        r.selected = frontier.join(selected_keys, "enqueue_seq").withColumn(
             "_cost", cost_col.cast("long")
         )
-        tr.mark("rotation (bucket counts)")
 
-        # 5. fetch: corpus + doc-store joins, then the ROUND SPEC v2
-        # decision table (fetch_source → failure injection on origin contact
-        # only → should_process; traversalPolicy.js:170-223)
+    def _fetch(self, r: _Round) -> None:
+        """Phase 3, select + fetch + the outcome histogram (ROUND SPEC v2
+        decision table). Reads r.selected, the corpus and, when anything is
+        stored or deleted, the MOR `stored` and tombstone lookups.
+        Materializes `fetched` (localCheckpoint, filled by the histogram
+        collect). Frees nothing. Sets r.fetched, r.hist (outcome → count)
+        and the counts it yields, r.round_min and the two lookups, which
+        compaction rewrites."""
+        cfg, rnd, manifest = self.cfg, r.rnd, r.manifest
+        # fetch: corpus + doc-store joins, then the ROUND SPEC v2 decision
+        # table (fetch_source → failure injection on origin contact only →
+        # should_process; traversalPolicy.js:170-223)
         corpus_keys = self.corpus.select(
             F.col("url").alias("c_url"), F.col("image_id")
         )
-        fetched = selected.join(
-            corpus_keys, selected.url == corpus_keys.c_url, "left"
+        fetched = r.selected.join(
+            corpus_keys, r.selected.url == corpus_keys.c_url, "left"
         ).drop("c_url")
         # the doc-store lookup only matters once something IS stored — the
         # manifest's docs_total counter lets an all-new crawl skip the
         # per-round docs scan + join entirely. The lookup is the compacted
         # MOR view (_read_stored): base ∪ deltas-past-base, never a replay
         # of the whole docs history.
-        docs_total = manifest.get("docs_total", 1)
-        stored_lookup = None
-        if docs_total > 0:
-            stored_lookup = self._read_stored(version, bases)
+        if manifest.get("docs_total", 1) > 0:
+            r.stored_lookup = self._read_stored(r.version, r.bases)
             fetched = fetched.join(
-                stored_lookup.select(
+                r.stored_lookup.select(
                     F.col("url").alias("s_url"),
                     F.col("round").alias("stored_round"),
                     F.col("version").alias("stored_version"),
@@ -1334,40 +1467,27 @@ class CrawlEngine:
         # url — gated on the manifest counter so a crawl that never saw a
         # deletion pays nothing; the table is deletion-rate-sized (rare), so
         # the per-round read is trivially bounded
-        tomb_total_prev = manifest.get("tombstones_total", 0)
-        tomb_lookup = None
-        if cfg.tombstones and (tomb_total_prev > 0 or tomb_new is not None):
+        if cfg.tombstones and (
+            manifest.get("tombstones_total", 0) > 0 or r.tomb_new is not None
+        ):
             # merge-on-read like every other state table: compacted base
-            # (bases['tombstones'], written on compaction rounds below) ∪
-            # deltas past it — the per-round fan-in is bounded by the
-            # compaction horizon, not crawl length
-            tomb_base = bases.get("tombstones")
-            if tomb_base is None:
-                try:
-                    prev_t = self.store.read_appends(
-                        self.spark, "tombstones", version
-                    )
-                except FileNotFoundError:
-                    prev_t = self._empty(TOMBSTONE_SCHEMA)
-            else:
-                prev_t = self.store.read(self.spark, "tombstones", tomb_base)
-                try:
-                    prev_t = prev_t.unionByName(
-                        self.store.read_appends(
-                            self.spark, "tombstones", version,
-                            from_version=tomb_base + 1,
-                        )
-                    )
-                except FileNotFoundError:
-                    pass
-            all_t = (
-                prev_t if tomb_new is None else prev_t.unionByName(tomb_new)
-            )
-            tomb_lookup = all_t.groupBy("url").agg(
+            # (bases['tombstones'], written on compaction rounds) ∪ deltas
+            # past it — the per-round fan-in is bounded by the compaction
+            # horizon, not crawl length
+            try:
+                all_t = self.store.read_merged(
+                    self.spark, "tombstones", r.version,
+                    r.bases.get("tombstones"), deltas="tombstones",
+                )
+            except FileNotFoundError:
+                all_t = self._empty(TOMBSTONE_SCHEMA)
+            if r.tomb_new is not None:
+                all_t = all_t.unionByName(r.tomb_new)
+            r.tomb_lookup = all_t.groupBy("url").agg(
                 F.max("round").alias("tomb_round")
             )
             fetched = fetched.join(
-                tomb_lookup.select(
+                r.tomb_lookup.select(
                     F.col("url").alias("t_url"), "tomb_round"
                 ),
                 F.col("url") == F.col("t_url"),
@@ -1403,7 +1523,7 @@ class CrawlEngine:
         # outcome taxonomy (crawler.js:509-519): transient throttle-class
         # failures log 'Throttled' (markRequeue('Throttled'),
         # githubFetcher.js:176-192), permanent-fail retries 'Requeued' —
-        # both re-enqueue identically (the requeue-class set below).
+        # both re-enqueue identically (the requeue-class set REQUEUE_CLASS).
         # v5: a DELETED url (tombstone at least as new as the stored doc)
         # short-circuits — non-origin sources to 'Deleted' (crawler.js:375),
         # origin contacts to 'Missing' (gone at origin); both complete with
@@ -1430,8 +1550,6 @@ class CrawlEngine:
             .when(process, "Processed")
             .otherwise("Unchanged"),
         )
-        REQUEUE_CLASS = ("Requeued", "Throttled")
-        baseline_prev = manifest.get("cost_baseline")
         if cfg.measured_costs:
             # deterministic observed elapsed (simulator.synthetic_elapsed
             # twin): fixed overhead + static-cost-proportional work + jitter
@@ -1455,32 +1573,35 @@ class CrawlEngine:
         # own SQL execution — 4 jobs in round 1 of the small-round crawl
         # benchmark. Only the last stage, which fills the checkpoint blocks,
         # waits for the histogram job right below.)
-        fetched = fetched.localCheckpoint(eager=False)
+        r.fetched = fetched = fetched.localCheckpoint(eager=False)
         # ONE job yields the whole outcome histogram (selected/requeued/
         # processed/...) — and, in measured mode, the round's min elapsed
         # for the baseline refresh rides the same aggregation
-        round_min = None
+        aggs = [F.count(F.lit(1)).alias("count")]
         if cfg.measured_costs:
-            rows = (
-                fetched.groupBy("outcome")
-                .agg(F.count(F.lit(1)).alias("count"), F.min("_elapsed").alias("mn"))
-                .collect()
-            )
-            hist = {r["outcome"]: r["count"] for r in rows}
-            mins = [r["mn"] for r in rows if r["mn"] is not None]
-            round_min = min(mins) if mins else None
-        else:
-            hist = {
-                r["outcome"]: r["count"]
-                for r in fetched.groupBy("outcome").count().collect()
-            }
-        tr.mark("select+fetch (hist)")
-        n_selected = sum(hist.values())
-        n_requeued = hist.get("Requeued", 0) + hist.get("Throttled", 0)
+            aggs.append(F.min("_elapsed").alias("mn"))
+        rows = fetched.groupBy("outcome").agg(*aggs).collect()
+        r.hist = {row["outcome"]: row["count"] for row in rows}
+        r.n_selected = sum(r.hist.values())
+        r.n_requeued = sum(r.hist.get(o, 0) for o in REQUEUE_CLASS)
+        if cfg.measured_costs:
+            mins = [row["mn"] for row in rows if row["mn"] is not None]
+            r.round_min = min(mins) if mins else None
 
+    def _write_early(self, r: _Round) -> None:
+        """Phase 4, early writes: builds this round's deltas (order log,
+        seen, frontier removes, docs, host-state changes, deadletters,
+        lineage, tombstones) and, on a compaction round, every base but the
+        frontier's, then submits their writes to the round's pool. They
+        read only r.fetched and frames cached before it, so they run while
+        the children pipeline (_enqueue) computes. A crashed attempt's
+        version directory is cleared once, before any base write starts.
+        Materializes and frees nothing. Sets r.newly_seen, r.seen_next,
+        r.compacting, r.new_bases and r.n_dl_extra."""
+        cfg, rnd, fetched, hist = self.cfg, r.rnd, r.fetched, r.hist
         # order log (seq = global running pop counter)
         log_rows = fetched.select(
-            (F.lit(total_popped) + F.col("pop_seq")).alias("seq"),
+            (F.lit(r.manifest["total_popped"]) + F.col("pop_seq")).alias("seq"),
             F.lit(rnd).alias("round"),
             F.col("pop_seq"),
             "url",
@@ -1491,10 +1612,10 @@ class CrawlEngine:
         )
 
         # 6. seen += non-requeued pops
-        newly_seen = fetched.filter(~F.col("outcome").isin(*REQUEUE_CLASS)).select(
-            "url", stable_long_hash(F.col("url")).alias("url_hash")
-        )
-        seen_next = seen.unionByName(newly_seen)
+        r.newly_seen = fetched.filter(
+            ~F.col("outcome").isin(*REQUEUE_CLASS)
+        ).select("url", stable_long_hash(F.col("url")).alias("url_hash"))
+        r.seen_next = r.seen.unionByName(r.newly_seen)
 
         # docs (+ optional decode/PSNR validation — the J8 audit). The doc
         # id comes from the corpus, a carried payload, or the prior store
@@ -1519,6 +1640,10 @@ class CrawlEngine:
             or ({"default": cfg.visitor_map} if cfg.visitor_map else None),
         )
         processed = fetched.filter(F.col("outcome") == "Processed")
+        psnr_cols = [
+            F.lit(None).cast("double").alias("psnr_db"),
+            F.lit(None).cast("boolean").alias("valid"),
+        ]
         if cfg.validate_images:
             cval = self.corpus.select(
                 F.col("url").alias("c_url"),
@@ -1527,47 +1652,34 @@ class CrawlEngine:
                 "ref_bytes",
                 "caption",
             )
-            docs_new = (
-                processed.join(cval, processed.url == cval.c_url, "left")
-                .withColumn(
-                    "psnr_db",
-                    F.when(
-                        F.col("bytes").isNotNull(),
-                        psnr_vs_reference_udf(
-                            F.col("bytes"), F.col("fmt"), F.col("ref_bytes"), F.lit("png")
-                        ),
+            processed = processed.join(
+                cval, processed.url == cval.c_url, "left"
+            ).withColumn(
+                "psnr_db",
+                F.when(
+                    F.col("bytes").isNotNull(),
+                    psnr_vs_reference_udf(
+                        F.col("bytes"), F.col("fmt"), F.col("ref_bytes"), F.lit("png")
                     ),
-                )
-                .withColumn("valid", F.col("psnr_db") >= 40.0)
-                .select(
-                    doc_id.alias("image_id"),
-                    "url",
-                    F.lit(rnd).alias("round"),
-                    F.lit(cfg.processor_version).alias("version"),
-                    "psnr_db",
-                    "valid",
-                    doc_urn.alias("urn"),
-                    F.col("qualifier").alias("parent_urn"),
-                    links_col.alias("links"),
-                )
+                ),
             )
-        else:
-            docs_new = processed.select(
-                doc_id.alias("image_id"),
-                "url",
-                F.lit(rnd).alias("round"),
-                F.lit(cfg.processor_version).alias("version"),
-                F.lit(None).cast("double").alias("psnr_db"),
-                F.lit(None).cast("boolean").alias("valid"),
-                doc_urn.alias("urn"),
-                F.col("qualifier").alias("parent_urn"),
-                links_col.alias("links"),
-            )
+            psnr_cols = ["psnr_db", (F.col("psnr_db") >= 40.0).alias("valid")]
+        docs_new = processed.select(
+            doc_id.alias("image_id"),
+            "url",
+            F.lit(rnd).alias("round"),
+            F.lit(cfg.processor_version).alias("version"),
+            *psnr_cols,
+            doc_urn.alias("urn"),
+            F.col("qualifier").alias("parent_urn"),
+            links_col.alias("links"),
+        )
 
         # 9. bucket spend (compute cost per popped row) + throttle benching.
         # Measured mode: charge = max(1, elapsed - baseline) once a baseline
         # exists; the preallocated static cost until then (computeLimiter's
         # consume(elapsed - baseline - preallocated) reconciliation)
+        baseline_prev = r.manifest.get("cost_baseline")
         if cfg.measured_costs and baseline_prev is not None:
             charge_col = F.greatest(
                 F.lit(1).cast("long"),
@@ -1576,7 +1688,7 @@ class CrawlEngine:
         else:
             charge_col = F.col("_cost")
         spend = fetched.groupBy("host").agg(F.sum(charge_col).alias("_n"))
-        levels_next = levels.join(spend, "host", "left").select(
+        levels_next = r.levels.join(spend, "host", "left").select(
             "host",
             (F.col("level") - F.coalesce(F.col("_n"), F.lit(0))).alias("level"),
             "bench_until",
@@ -1602,23 +1714,22 @@ class CrawlEngine:
         # Missing rows immediately (crawler.js:528-533); Bailed is the
         # post-elevated-retry permanent failure (githubFetcher.js:67-72)
         extra_dl: list[DataFrame] = []
-        n_dl_extra = 0
-        if cfg.exclude_not_found and hist.get("Missing", 0) > 0:
-            extra_dl.append(
-                fetched.filter(F.col("outcome") == "Missing").select(
-                    "url", "type", "tier", F.lit(rnd).alias("round"),
-                    "attempt", F.lit("excludeNotFound").alias("reason"),
-                )
-            )
-            n_dl_extra += hist["Missing"]
-        if cfg.bailed_retry and hist.get("Bailed", 0) > 0:
-            extra_dl.append(
-                fetched.filter(F.col("outcome") == "Bailed").select(
-                    "url", "type", "tier", F.lit(rnd).alias("round"),
-                    "attempt", F.lit("Bailed").alias("reason"),
-                )
-            )
-            n_dl_extra += hist["Bailed"]
+        for on, outcome, reason in (
+            (cfg.exclude_not_found, "Missing", "excludeNotFound"),
+            (cfg.bailed_retry, "Bailed", "Bailed"),
+        ):
+            if on and hist.get(outcome, 0) > 0:
+                extra_dl.append(_deadletter_rows(
+                    fetched.filter(F.col("outcome") == outcome), rnd, reason
+                ))
+                r.n_dl_extra += hist[outcome]
+        dl = None
+        if r.n_dead > 0 or r.ev_dead is not None or extra_dl:
+            dl = _deadletter_rows(r.dead, rnd, "max_attempts")
+            if r.ev_dead is not None:
+                dl = dl.unionByName(r.ev_dead)
+            for x in extra_dl:
+                dl = dl.unionByName(x)
 
         # ---- state writes: merge-on-read. A round writes ONLY the rows it
         # touched — frontier adds (children+requeues), frontier removes
@@ -1627,7 +1738,7 @@ class CrawlEngine:
         # Every cfg.compact_every rounds the current frontier/seen/stored/
         # host_state views are rewritten as new BASES, which bounds both the
         # delta-dir fan-in and the delete-key anti-join a read performs.
-        hs_old = host_state.select(
+        hs_old = r.host_state.select(
             "host",
             F.col("level").alias("_ol"),
             F.col("bench_until").alias("_ob"),
@@ -1650,18 +1761,18 @@ class CrawlEngine:
         # compaction round: every base except the frontier's reads only
         # frames that exist now, so those bases join the early writes below;
         # the frontier base needs this round's enqueues and goes out last
-        compacting = bool(
-            cfg.compact_every and rnd - bases["frontier"] >= cfg.compact_every
+        r.compacting = bool(
+            cfg.compact_every and rnd - r.bases["frontier"] >= cfg.compact_every
         )
         base_tables: dict = {}
-        new_bases = dict(bases)
-        if compacting:
-            base_tables["seen"] = seen_next
+        r.new_bases = dict(r.bases)
+        if r.compacting:
+            base_tables["seen"] = r.seen_next
             base_tables["host_state"] = levels_next
             # doc-store lookup base: prior view ∪ this round's upserts
             prior = (
-                stored_lookup
-                if stored_lookup is not None
+                r.stored_lookup
+                if r.stored_lookup is not None
                 else self._empty(STORED_SCHEMA)
             )
             base_tables["stored"] = (
@@ -1669,39 +1780,50 @@ class CrawlEngine:
                 .groupBy("url")
                 .agg(F.max("round").alias("round"), F.max("version").alias("version"))
             )
-            if tomb_lookup is not None:
+            if r.tomb_lookup is not None:
                 # tombstones compact with everything else: the base is the
                 # deduped (url, latest round) view, so readers union ≤
                 # compact_every delta dirs on top of it
-                base_tables["tombstones"] = tomb_lookup.select(
+                base_tables["tombstones"] = r.tomb_lookup.select(
                     "url", F.col("tomb_round").cast("int").alias("round")
                 )
             for name in ("frontier", *base_tables):
-                new_bases[name] = rnd
-        dl = None
-        if n_dead > 0 or ev_dead is not None or extra_dl:
-            dl = dead.select(
-                "url",
-                "type",
-                "tier",
-                F.lit(rnd).alias("round"),
-                "attempt",
-                F.lit("max_attempts").alias("reason"),
-            )
-            if ev_dead is not None:
-                dl = dl.unionByName(ev_dead)
-            for x in extra_dl:
-                dl = dl.unionByName(x)
-        # per-partition lineage (north_rule): which (tier, host-bucket)
-        # partition produced what this round — the audit trail that lets a
-        # resumed run prove each partition was applied exactly once
-        lineage = (
-            fetched.groupBy(
+                r.new_bases[name] = rnd
+
+        self.store.clear_version(rnd)
+        append = self.store.write_append
+        r.write("write host_state_adds", append, rnd, "host_state_adds", hs_delta)
+        r.write(
+            "write frontier_removes", append, rnd, "frontier_removes",
+            fetched.select("enqueue_seq").unionByName(r.dead.select("enqueue_seq")),
+        )
+        r.write("write seen", append, rnd, "seen", r.newly_seen)
+        r.write("write order_log", append, rnd, "order_log", log_rows)
+        r.write("write lineage", append, rnd, "lineage", self._lineage(r))
+        for name, df in base_tables.items():
+            r.write(f"base {name}", self.store.write_tables, rnd, {name: df})
+        if dl is not None:
+            r.write("write deadletter_adds", append, rnd, "deadletter_adds", dl)
+        if r.tomb_new is not None:
+            r.write("write tombstones", append, rnd, "tombstones", r.tomb_new)
+        if hist.get("Processed", 0) > 0:
+            r.write("write docs", append, rnd, "docs", docs_new)
+
+    def _lineage(self, r: _Round) -> DataFrame:
+        """Per-partition lineage (north_rule): which (tier, host-bucket)
+        partition produced what this round — the audit trail that lets a
+        resumed run prove each partition was applied exactly once."""
+        def by_partition(df: DataFrame) -> DataFrame:
+            return df.groupBy(
                 "tier",
                 F.pmod(F.xxhash64("host"), F.lit(LINEAGE_BUCKETS))
                 .cast("int")
                 .alias("host_bucket"),
             )
+
+        zero = F.lit(0).cast("long")
+        lineage = (
+            by_partition(r.fetched)
             .agg(
                 F.count(F.lit(1)).alias("n_popped"),
                 F.sum((F.col("outcome") == "Processed").cast("long")).alias("n_processed"),
@@ -1710,7 +1832,7 @@ class CrawlEngine:
                 F.sum((F.col("outcome") == "Missing").cast("long")).alias("n_missing"),
             )
             .select(
-                F.lit(rnd).alias("round"),
+                F.lit(r.rnd).alias("round"),
                 "tier",
                 "host_bucket",
                 "n_popped",
@@ -1718,75 +1840,42 @@ class CrawlEngine:
                 "n_traversed",
                 "n_requeued",
                 "n_missing",
-                F.lit(0).cast("long").alias("n_deferred"),
+                zero.alias("n_deferred"),
             )
         )
-        if n_deferred > 0:
-            # Deferred rows (benched-host withhold) never reach `fetched`;
-            # they land in lineage as their own per-partition counts so the
-            # audit trail shows WHICH (tier, host-bucket) sat out the round
-            # (crawler.js:512-515 deferred visibility). Rides the lineage
-            # write job — no extra action.
-            benched = host_stats.filter(F.col("bench_until") >= rnd).select(
-                "host"
+        if r.n_deferred == 0:
+            return lineage
+        # Deferred rows (benched-host withhold) never reach `fetched`;
+        # they land in lineage as their own per-partition counts so the
+        # audit trail shows WHICH (tier, host-bucket) sat out the round
+        # (crawler.js:512-515 deferred visibility). Rides the lineage
+        # write job — no extra action.
+        benched = r.host_stats.filter(F.col("bench_until") >= r.rnd).select("host")
+        deferred_rows = (
+            by_partition(r.eligible.join(F.broadcast(benched), "host", "left_semi"))
+            .agg(F.count(F.lit(1)).alias("n_deferred"))
+            .select(
+                F.lit(r.rnd).alias("round"),
+                "tier",
+                "host_bucket",
+                zero.alias("n_popped"),
+                zero.alias("n_processed"),
+                zero.alias("n_traversed"),
+                zero.alias("n_requeued"),
+                zero.alias("n_missing"),
+                F.col("n_deferred").cast("long").alias("n_deferred"),
             )
-            deferred_rows = (
-                eligible.join(F.broadcast(benched), "host", "left_semi")
-                .groupBy(
-                    "tier",
-                    F.pmod(F.xxhash64("host"), F.lit(LINEAGE_BUCKETS))
-                    .cast("int")
-                    .alias("host_bucket"),
-                )
-                .agg(F.count(F.lit(1)).alias("n_deferred"))
-                .select(
-                    F.lit(rnd).alias("round"),
-                    "tier",
-                    "host_bucket",
-                    F.lit(0).cast("long").alias("n_popped"),
-                    F.lit(0).cast("long").alias("n_processed"),
-                    F.lit(0).cast("long").alias("n_traversed"),
-                    F.lit(0).cast("long").alias("n_requeued"),
-                    F.lit(0).cast("long").alias("n_missing"),
-                    F.col("n_deferred").cast("long").alias("n_deferred"),
-                )
-            )
-            lineage = lineage.unionByName(deferred_rows)
+        )
+        return lineage.unionByName(deferred_rows)
 
-        # ---- early state writes: these deltas and bases read only `fetched`
-        # (materialized by the histogram collect above) and frames cached
-        # before it, so they run while the children pipeline below computes.
-        # A crashed attempt's version directory is cleared once, before any
-        # base write starts. All writes are joined before the manifest
-        # commit.
-        self.store.clear_version(rnd)
-        append = self.store.write_append
-        early = [
-            partial(append, rnd, "host_state_adds", hs_delta),
-            partial(
-                append, rnd, "frontier_removes",
-                fetched.select("enqueue_seq").unionByName(dead.select("enqueue_seq")),
-            ),
-            partial(append, rnd, "seen", newly_seen),
-            partial(append, rnd, "order_log", log_rows),
-            partial(append, rnd, "lineage", lineage),
-        ]
-        early += [
-            partial(self.store.write_tables, rnd, {name: df})
-            for name, df in base_tables.items()
-        ]
-        if dl is not None:
-            early.append(partial(append, rnd, "deadletter_adds", dl))
-        if tomb_new is not None:
-            early.append(partial(append, rnd, "tombstones", tomb_new))
-        if hist.get("Processed", 0) > 0:
-            early.append(partial(append, rnd, "docs", docs_new))
-        writes = [pool.submit(w) for w in early]
-
-        # 7. children of Traversed pages (all selected-derived frames read
-        # the persisted `fetched` — `selected` itself is never re-executed)
-        remaining = eligible.join(fetched.select("url"), "url", "left_anti")
-        parents = fetched.filter(F.col("outcome") == "Traversed").select(
+    def _child_candidates(self, r: _Round) -> DataFrame:
+        """The candidate children of this round's Traversed pages: link
+        targets and pagination pages, minus edges already on the parent's
+        path and edges the row's map cut does not declare, attenuated to
+        one row per url (first discovery wins, J4). Reads r.fetched and the
+        cached links. Lazy: materializes and frees nothing."""
+        cfg = self.cfg
+        parents = r.fetched.filter(F.col("outcome") == "Traversed").select(
             F.col("url").alias("src_url"),
             F.col("pop_seq").alias("parent_pop"),
             F.col("type").alias("parent_type"),
@@ -1809,27 +1898,23 @@ class CrawlEngine:
             # implementation detail, not a traversal step)
             F.col("qualifier").alias("p_qualifier"),
         )
+        parent_cols = (
+            "p_fetch", "p_fresh", "p_map", "p_history", "p_urn", "p_map_name",
+            "p_qualifier",
+        )
+        # per-traversal hasSeen (U2, lib/request.js:66-74,146-150): an edge
+        # whose target key already appears on this path is INVISIBLE — this,
+        # not the global seen set, is what bounds cyclic revisit policies
+        not_on_path = ~F.expr("array_contains(p_history, concat(type, '@', url))")
         raw_children = parents.join(self.links, "src_url").select(
             "parent_pop",
             "parent_type",
             F.col("edge"),
             F.col("dst_url").alias("url"),
             F.col("dst_type").alias("type"),
-            "p_fetch",
-            "p_fresh",
-            "p_map",
-            "p_history",
-            "p_urn",
-            "p_map_name",
-            "p_qualifier",
+            *parent_cols,
             F.lit(False).alias("_is_page"),
-        )
-        # per-traversal hasSeen (U2, lib/request.js:66-74,146-150): an edge
-        # whose target key already appears on this path is INVISIBLE — this,
-        # not the global seen set, is what bounds cyclic revisit policies
-        raw_children = raw_children.filter(
-            ~F.expr("array_contains(p_history, concat(type, '@', url))")
-        )
+        ).filter(not_on_path)
         if cfg.scenario_maps is not None or cfg.visitor_map is not None:
             # only traverse edges the row's NAMED map cut declares for the
             # parent type (visitorMap.js:140-390; named scenario cuts
@@ -1879,13 +1964,7 @@ class CrawlEngine:
                         F.sequence(F.lit(2), F.col("_last"))
                     ).alias("_page"),
                     F.col("src_url"),
-                    "p_fetch",
-                    "p_fresh",
-                    "p_map",
-                    "p_history",
-                    "p_urn",
-                    "p_map_name",
-                    "p_qualifier",
+                    *parent_cols,
                 )
                 .select(
                     "parent_pop",
@@ -1899,19 +1978,11 @@ class CrawlEngine:
                         F.lit("&per_page=100"),
                     ).alias("url"),
                     F.col("parent_type").alias("type"),
-                    "p_fetch",
-                    "p_fresh",
-                    "p_map",
-                    "p_history",
-                    "p_urn",
-                    "p_map_name",
-                    "p_qualifier",
+                    *parent_cols,
                     F.lit(True).alias("_is_page"),
                 )
                 # same per-traversal hasSeen guard as edge children (U2)
-                .filter(
-                    ~F.expr("array_contains(p_history, concat(type, '@', url))")
-                )
+                .filter(not_on_path)
             )
             raw_children = raw_children.unionByName(page_rows)
         raw_children = raw_children.drop("parent_type")
@@ -1921,12 +1992,26 @@ class CrawlEngine:
         # attenuation drops per round (attenuatedQueue.js:24-52 telemetry)
         w_att = Window.partitionBy("url").orderBy("parent_pop", "edge", "url")
         w_url = Window.partitionBy("url")
-        uniq = (
+        return (
             raw_children.withColumn("_rn", F.row_number().over(w_att))
             .withColumn("_ndup", F.count(F.lit(1)).over(w_url))
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
+
+    def _enqueue(self, r: _Round) -> None:
+        """Phase 5, children + seen-set merge + enqueue. Reads r.fetched,
+        r.eligible, the seen set and the candidates of _child_candidates.
+        Merges the Bloom set with this round's newly seen keys on the pool
+        while the candidate count runs. Materializes the candidates
+        (persist, filled by that count), the probe output (persist), the
+        deduped children `fresh` (eager localCheckpoint) and the enqueue
+        batch `new_rows` (persist, filled by the per-group totals collect).
+        Frees nothing. Sets r.remaining, the Bloom sets, r.fresh and
+        r.fresh_denied, r.new_rows, r.new_rows_clean and the enqueue
+        counts."""
+        cfg, fetched = self.cfg, r.fetched
+        r.remaining = r.eligible.join(fetched.select("url"), "url", "left_anti")
         # dedup vs seen (Bloom + exact confirm) and vs in-flight frontier.
         # persist + count the attenuated candidate batch ONCE: the count job
         # fills the cache (links join + attenuation window run exactly once)
@@ -1934,10 +2019,10 @@ class CrawlEngine:
         # candidate batch is bounded per round, the seen set and the frontier
         # are NOT (O(total crawled) / O(10^10) at target scale), so neither
         # may ever be shuffled for these dedups.
-        uniq = uniq.withColumn(
+        uniq = self._child_candidates(r).withColumn(
             "url_hash", stable_long_hash(F.col("url"))
         ).persist()
-        persisted.append(uniq)
+        r.persisted.append(uniq)
         # INCREMENTAL: Bloom union is bitwise OR — fold only this round's
         # newly-seen keys into last round's persisted shard blobs instead
         # of rescanning the whole seen set (O(batch), not O(total)).
@@ -1946,19 +2031,19 @@ class CrawlEngine:
         # slightly different filter still commits identical state.
         # The merge reads only `fetched`, so it runs on a pool thread while
         # the candidate count fills the `uniq` cache.
-        bloom_prev = self._load_bloom(version, manifest, seen)
-        merging = pool.submit(bloom_prev.merged, newly_seen.select("url_hash"))
-        n_cand = uniq.count()
-        cand_broadcastable = n_cand <= cfg.dedup_broadcast_max
+        r.bloom_prev = self._load_bloom(r.version, r.manifest, r.seen)
+        merging = r.submit(
+            "bloom merge", r.bloom_prev.merged, r.newly_seen.select("url_hash")
+        )
+        cand_broadcastable = uniq.count() <= CONFIRM_BROADCAST_MAX
         bloom = merging.result()
-        tr.mark("candidate count + bloom merge")
         # newly-seen rows this round = selected − requeued, already counted
         # by the outcome histogram
-        bloom_total = bloom.live_total(
-            (manifest.get("bloom") or {}).get("total_keys", 0),
-            max(0, n_selected - n_requeued),
+        r.bloom_total = bloom.live_total(
+            (r.manifest.get("bloom") or {}).get("total_keys", 0),
+            max(0, r.n_selected - r.n_requeued),
         )
-        if bloom_total > bloom.HEADROOM * bloom.capacity_per_shard * max(
+        if r.bloom_total > bloom.HEADROOM * bloom.capacity_per_shard * max(
             1, bloom.num_shards
         ):
             # amortized resize: full rebuild at 4x TOTAL capacity (happens
@@ -1966,7 +2051,7 @@ class CrawlEngine:
             # grows the shard count so one shard's blob stays ≤
             # SHARD_MAX_BYTES and re-resolves the probe shape for the NEW
             # sizing (a growing crawl flips broadcast → shard-local here).
-            # The new shard count lands in the manifest below, so
+            # The new shard count lands in the manifest at commit, so
             # resume/replay re-derives pmod(key, num_shards)
             # deterministically. DISTINCT keys: the seen log re-appends
             # always-recrawled urls; deduping trims the build and makes the
@@ -1977,23 +2062,23 @@ class CrawlEngine:
             min_shards = max(cfg.bloom_shards, bloom.num_shards)
             bloom.destroy()
             bloom = seen_set.build(
-                bloom.KIND, seen_next.select("url_hash").distinct(),
+                bloom.KIND, r.seen_next.select("url_hash").distinct(),
                 total_expected, min_shards, cfg.bloom_fpr,
             )
             # reset the running insert counter from the rebuilt filters
             # (== distinct seen keys): the pre-reset sum counts re-crawls,
             # so carrying it forward would re-trigger full rebuilds every
             # few rounds on recrawl-heavy (freshness 'always') crawls
-            bloom_total = bloom.total_keys()
-            tr.mark("seen-set resize rebuild")
+            r.bloom_total = bloom.total_keys()
+        r.bloom = bloom
         # revisit rule (ROUND SPEC v2 step 7): freshness 'always' children
         # bypass the seen-set dedup (the page may have changed; history above
         # already bounds cycles) — everything else defers to the dedup cache
         always_kids = uniq.filter(F.col("p_fresh") == "always").drop("url_hash")
         match_kids = uniq.filter(F.col("p_fresh") != "always")
         unseen_children = filter_unseen(
-            match_kids, seen_next.select("url_hash"), bloom, key_col="url_hash",
-            persisted=persisted, confirm_broadcast=cand_broadcastable,
+            match_kids, r.seen_next.select("url_hash"), bloom, key_col="url_hash",
+            persisted=r.persisted, confirm_broadcast=cand_broadcastable,
         ).drop("url_hash").unionByName(always_kids)
         # in-flight dedup (J5): a child already sitting in the frontier (or
         # re-enqueued this round) must not enqueue twice. The frontier is
@@ -2006,9 +2091,8 @@ class CrawlEngine:
         # bounce telemetry) rides the same enqueue counts job as everything
         # else (zero extra actions). Fallback for an over-sized candidate
         # batch is the plain shuffle left join.
-        inflight_urls = remaining.select("url").unionByName(
-            fetched.filter(F.col("outcome").isin(*REQUEUE_CLASS)).select("url")
-        )
+        requeues = fetched.filter(F.col("outcome").isin(*REQUEUE_CLASS))
+        inflight_urls = r.remaining.select("url").unionByName(requeues.select("url"))
         if cand_broadcastable:
             inflight_hits = (
                 inflight_urls.join(
@@ -2031,65 +2115,31 @@ class CrawlEngine:
         # localCheckpoint: both the allowed (frontier) and denied (excluded)
         # branches read this frame, and its plan (links join + Bloom probe +
         # anti-joins) would otherwise be re-embedded in the enqueue/write
-        # trees — truncate it like `fetched` above. EAGER, unlike `fetched`:
+        # trees — truncate it like `fetched`. EAGER, unlike `fetched`:
         # the enqueue counts collect below reads it from several concurrent
         # AQE jobs (6 in round 1 of the small-round crawl benchmark). Left
         # to them, the first job to fill a partition truncates the lineage
         # while the others' tasks still report SQL metrics of the dropped
         # plan ("non-existent accumulator" errors). One serial job fills it.
-        fresh = (
+        r.fresh = fresh = (
             marked.withColumn(
                 "_bounced", F.coalesce(F.col("_bounced"), F.lit(False))
             )
             .withColumn("host", extract_host(F.col("url")))
             .localCheckpoint(eager=True)
         )
-        fresh_allowed, fresh_denied = self._robots_allowed(
+        fresh_allowed, r.fresh_denied = self._robots_allowed(
             fresh.filter(~F.col("_bounced"))
         )
-        bounce_src = fresh.filter(F.col("_bounced"))
 
-        # 7b+8. one window assigns enqueue_seq to children AND tail requeues:
-        # children first (_grp=0, by parent pop then url), then requeues
-        # (_grp=1, by pop order). The per-round enqueue batch is bounded by
-        # round_capacity × fan-out, so the single-partition sort is safe.
-        # Bounced candidates ride the same union as _grp=2 PURELY so their
-        # count lands in the one enqueue-totals collect — they are filtered
-        # out before any state write and never consume enqueue_seq numbers
+        # 7b+8. one enqueue batch: children first (_grp=0, by parent pop then
+        # url), then tail requeues (_grp=1, by pop order). Bounced
+        # candidates ride the same union as _grp=2 PURELY so their count
+        # lands in the one enqueue-totals collect — they are filtered out
+        # before any state write and never consume enqueue_seq numbers
         # (per-group offsets are independent; next_seq advances by groups
         # 0+1 only).
-        def _candidate_rows(src: DataFrame, grp: int) -> DataFrame:
-            return src.select(
-                "url",
-                "type",
-                F.when(
-                    F.col("_is_page") | (F.col("edge") == "images"), "soon"
-                ).otherwise("normal").alias("tier"),
-                "host",
-                F.lit(0).cast("int").alias("attempt"),
-                F.lit(grp).alias("_grp"),
-                F.col("parent_pop").cast("long").alias("_ord"),
-                # children inherit the winning parent's policy; the map path
-                # descends one step (traversalPolicy.js:154-160) — EXCEPT
-                # page rows, which keep the parent's own path + qualifier
-                # (the page is the same logical resource)
-                F.col("p_fetch").alias("policy_fetch"),
-                F.col("p_fresh").alias("policy_freshness"),
-                F.when(F.col("_is_page"), F.col("p_map"))
-                .otherwise(next_map_path(F.col("p_map"), F.col("edge")))
-                .alias("map_path"),
-                F.col("p_history").alias("history"),
-                F.lit(None).cast("string").alias("payload_id"),
-                F.when(F.col("_is_page"), F.col("p_qualifier"))
-                .otherwise(F.col("p_urn"))
-                .alias("qualifier"),
-                F.col("p_map_name").alias("map_name"),
-                F.col("_ndup").cast("long").alias("_ndup"),
-            )
-
-        child_rows = _candidate_rows(fresh_allowed, 0)
-        bounce_rows = _candidate_rows(bounce_src, 2)
-        rq_rows = fetched.filter(F.col("outcome").isin(*REQUEUE_CLASS)).select(
+        rq_rows = requeues.select(
             "url",
             "type",
             "tier",
@@ -2106,66 +2156,23 @@ class CrawlEngine:
             "map_name",
             F.lit(1).cast("long").alias("_ndup"),
         )
-        # enqueue assignment: distributed rank over (_grp, _ord, url) —
-        # children before requeues, both FIFO — with NO global Window.orderBy
-        # over the rows (which would sort the whole enqueue batch in ONE
-        # task) and no driver collect of row-level data. _ord is a parent
-        # pop_seq (≤ round_capacity distinct values): prefix offsets are a
-        # running sum over the tiny (_grp, _ord) COUNTS table, the requeue
-        # group's base offset (= children total) rides a broadcast 1-row
-        # aggregate instead of a driver collect, and the final rank is a
-        # window per (_grp, _ord) whose sort is bounded by a single parent's
-        # fan-out. The only collect here is the 2-row per-group totals that
-        # ALSO fills new_rows' cache blocks (one job, two purposes).
         union_rows = (
-            child_rows.unionByName(rq_rows).unionByName(bounce_rows).persist()
-        )
-        persisted.append(union_rows)
-        counts = union_rows.groupBy("_grp", "_ord").agg(
-            F.count(F.lit(1)).alias("_cnt")
-        )
-        w_off = (
-            Window.partitionBy("_grp")
-            .orderBy("_ord")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        g0_total = counts.agg(
-            F.coalesce(
-                F.sum(F.when(F.col("_grp") == 0, F.col("_cnt"))), F.lit(0)
-            ).alias("_g0")
-        )
-        offs = (
-            counts.withColumn(
-                "_poff", F.coalesce(F.sum("_cnt").over(w_off), F.lit(0))
-            )
-            .crossJoin(F.broadcast(g0_total))
-            .withColumn(
-                "_off",
-                F.col("_poff")
-                + F.when(F.col("_grp") == 1, F.col("_g0")).otherwise(F.lit(0)),
-            )
-        )
-        w_enq = Window.partitionBy("_grp", "_ord").orderBy("url")
-        new_rows = (
-            union_rows.join(offs.select("_grp", "_ord", "_off"), ["_grp", "_ord"])
-            .withColumn(
-                "enqueue_seq",
-                (F.lit(next_seq) + F.col("_off") + F.row_number().over(w_enq))
-                .cast("long"),
-            )
-            .drop("_off")
+            _child_rows(fresh_allowed, 0)
+            .unionByName(rq_rows)
+            .unionByName(_child_rows(fresh.filter(F.col("_bounced")), 2))
             .persist()
         )
+        r.persisted.append(union_rows)
+        r.new_rows = new_rows = _assign_enqueue_seq(union_rows, r.next_seq).persist()
         # MATERIALIZE before the late writes start: frontier_adds and the
         # compaction frontier base both scan new_rows, and a first-touch race
         # on an unfilled cached frame from parallel jobs starves the few
         # local executor slots (tasks block on the cache-fill lock while
         # holding slots); the early writes already running read no new_rows.
         # One aggregation over the already-cached inputs fills the blocks
-        # once, serially — and its 2-row result IS the per-group totals (children count + J4
-        # attenuation drops: visible candidate edges collapsed into kept
-        # children, occurrences - 1 per enqueued dst), so the former
-        # separate totals collect is gone.
+        # once, serially — and its 2-row result IS the per-group totals
+        # (children count + J4 attenuation drops: visible candidate edges
+        # collapsed into kept children, occurrences - 1 per enqueued dst).
         grp_rows = (
             new_rows.groupBy("_grp")
             .agg(
@@ -2174,14 +2181,13 @@ class CrawlEngine:
             )
             .collect()
         )
-        grp_totals = {r["_grp"]: r["t"] for r in grp_rows}
-        n_children = int(grp_totals.get(0, 0))
-        n_bounced = int(grp_totals.get(2, 0))
-        n_attenuated = int(
-            next((r["att"] for r in grp_rows if r["_grp"] == 0), 0) or 0
+        grp_totals = {row["_grp"]: row["t"] for row in grp_rows}
+        r.n_children = int(grp_totals.get(0, 0))
+        r.n_bounced = int(grp_totals.get(2, 0))
+        r.n_attenuated = int(
+            next((row["att"] for row in grp_rows if row["_grp"] == 0), 0) or 0
         )
-        tr.mark("children+enqueue (count)")
-        new_rows_clean = new_rows.filter(F.col("_grp") != 2).select(
+        r.new_rows_clean = new_rows.filter(F.col("_grp") != 2).select(
             "url",
             "type",
             "tier",
@@ -2199,46 +2205,51 @@ class CrawlEngine:
             "map_name",
         )
 
+    def _commit_round(self, r: _Round) -> None:
+        """Phase 6, late writes and commit: submits the writes of this
+        round's enqueues (frontier adds and, on a compaction round, the
+        frontier base), the metrics row, the Bloom blobs and the robots
+        exclusions; joins every write of the round; garbage-collects
+        absorbed event files; commits the manifest. Reads r.remaining,
+        r.new_rows_clean, r.ingested, r.fresh_denied and the round's counts.
+        Materializes nothing. Frees, after the commit, `fetched`,
+        `new_rows`, `fresh`, everything in r.persisted and the superseded
+        Bloom sets."""
+        cfg, rnd, manifest = self.cfg, r.rnd, r.manifest
+        n_selected, n_requeued = r.n_selected, r.n_requeued
         # size arithmetic — no count jobs (invariant-checked by tests)
         n_frontier_after = (
-            manifest["frontier_size"] + n_ingested
-            - n_dead - n_selected + n_children + n_requeued
+            manifest["frontier_size"] + r.n_ingested
+            - r.n_dead - n_selected + r.n_children + n_requeued
         )
-
         metrics_new = self.spark.createDataFrame(
-            [(rnd, n_selected, n_children, n_requeued, n_dead + n_dl_extra,
-              n_frontier_after, n_ingested, n_attenuated, n_deferred,
-              n_bounced)],
+            [(rnd, n_selected, r.n_children, n_requeued, r.n_dead + r.n_dl_extra,
+              n_frontier_after, r.n_ingested, r.n_attenuated, r.n_deferred,
+              r.n_bounced)],
             METRICS_SCHEMA,
         )
-
-        frontier_adds = new_rows_clean
-        if ingested is not None:
-            frontier_adds = ingested.unionByName(frontier_adds)
-        # ---- late state writes: the frames of this round's enqueues and the
-        # merged seen set. The frontier base of a compaction round is the
-        # largest write, so it starts first.
-        late = []
-        if compacting:
-            late.append(partial(
-                self.store.write_tables, rnd,
-                {"frontier": remaining.unionByName(new_rows_clean)},
-            ))
-        late += [
-            partial(append, rnd, "frontier_adds", frontier_adds),
-            partial(append, rnd, "metrics", metrics_new),
-            partial(self._write_bloom, rnd, bloom),
-        ]
-        if self.cfg.robots_deny:
-            excl = fresh_denied.select("url", F.lit(rnd).alias("round"))
-            if ev_excl is not None:
-                excl = ev_excl.unionByName(excl)
-            late.append(partial(append, rnd, "excluded", excl))
-        writes += [pool.submit(w) for w in late]
+        frontier_adds = r.new_rows_clean
+        if r.ingested is not None:
+            frontier_adds = r.ingested.unionByName(frontier_adds)
+        # the frontier base of a compaction round is the largest write, so
+        # it starts first
+        if r.compacting:
+            r.write(
+                "base frontier", self.store.write_tables, rnd,
+                {"frontier": r.remaining.unionByName(r.new_rows_clean)},
+            )
+        append = self.store.write_append
+        r.write("write frontier_adds", append, rnd, "frontier_adds", frontier_adds)
+        r.write("write metrics", append, rnd, "metrics", metrics_new)
+        r.write("write bloom", self._write_bloom, rnd, r.bloom)
+        if cfg.robots_deny:
+            excl = r.fresh_denied.select("url", F.lit(rnd).alias("round"))
+            if r.ev_excl is not None:
+                excl = r.ev_excl.unionByName(excl)
+            r.write("write excluded", append, rnd, "excluded", excl)
         # the durability point is the single manifest swap in commit(): it
         # runs only once every write of the round has finished
-        _join(writes)
-        tr.mark("state writes")
+        _join(r.writes)
         # ingest bookkeeping: {staged filename → absorb round}. Files whose
         # absorb round is at or before the (new) frontier base pointer are
         # durable history — delete them from the staging dir and prune their
@@ -2251,59 +2262,59 @@ class CrawlEngine:
         if isinstance(prev_ing, list):  # legacy manifests: names only
             prev_ing = dict.fromkeys(prev_ing, manifest["round"])
         ingested_map = dict(prev_ing)
-        for name in pending_files:
+        for name in r.pending_files:
             ingested_map[name] = rnd
-        if self.cfg.ingest_dir:
-            gc_cutoff = min(new_bases["frontier"], rnd - 1)
+        if cfg.ingest_dir:
+            gc_cutoff = min(r.new_bases["frontier"], rnd - 1)
             for name, r_abs in list(ingested_map.items()):
                 if r_abs <= gc_cutoff:
                     try:
-                        os.remove(os.path.join(self.cfg.ingest_dir, name))
+                        os.remove(os.path.join(cfg.ingest_dir, name))
                     except FileNotFoundError:
                         pass
                     del ingested_map[name]
         extras = {
-            "next_seq": next_seq + n_children + n_requeued,
-            "total_popped": total_popped + n_selected,
+            "next_seq": r.next_seq + r.n_children + n_requeued,
+            "total_popped": manifest["total_popped"] + n_selected,
             "round": rnd,
             "frontier_size": n_frontier_after,
-            "bases": new_bases,
+            "bases": r.new_bases,
             "ingested": ingested_map,
-            "docs_total": manifest.get("docs_total", 0) + hist.get("Processed", 0),
-            "tombstones_total": tomb_total_prev + n_tomb,
+            "docs_total": manifest.get("docs_total", 0) + r.hist.get("Processed", 0),
+            "tombstones_total": manifest.get("tombstones_total", 0) + r.n_tomb,
         }
         if manifest.get("config_patches"):
             extras["config_patches"] = manifest["config_patches"]
         if cfg.measured_costs:
-            if round_min is not None:
+            baseline_prev = manifest.get("cost_baseline")
+            if r.round_min is not None:
                 extras["cost_baseline"] = (
-                    round_min
+                    r.round_min
                     if baseline_prev is None
-                    else min(int(baseline_prev), round_min)
+                    else min(int(baseline_prev), r.round_min)
                 )
             elif baseline_prev is not None:
                 extras["cost_baseline"] = baseline_prev
-        extras["bloom"] = bloom.manifest(bloom_total)
+        extras["bloom"] = r.bloom.manifest(r.bloom_total)
         self.store.commit(rnd, extras)
-        _free_checkpoint(fetched)
-        new_rows.unpersist()
-        _free_checkpoint(fresh)
-        for f in persisted:
+        _free_checkpoint(r.fetched)
+        r.new_rows.unpersist()
+        _free_checkpoint(r.fresh)
+        for f in r.persisted:
             f.unpersist()
         # cache the new set for next round, re-rooted on the rows just
         # persisted (lineage truncation); free superseded sets
         old = self._bloom
-        bloom = bloom.rerooted(
+        bloom = r.bloom.rerooted(
             lambda: self.store.read_appends(
                 self.spark, "bloom", rnd, from_version=rnd
             )
         )
         self._bloom, self._bloom_version = bloom, rnd
         # old and bloom_prev are normally the same object; dedup by id
-        for stale in {id(s): s for s in (old, bloom_prev)}.values():
+        for stale in {id(s): s for s in (old, r.bloom_prev)}.values():
             if stale is not None and stale is not bloom:
                 stale.destroy()
-        return True
 
     def _carry_extras(self, manifest: dict, **overrides) -> dict:
         """Manifest extras for an ADMIN commit (flush/peek-remove/requeue):
@@ -2454,7 +2465,6 @@ class CrawlEngine:
             "type",
             "tier",
             extract_host("url").alias("host"),
-            F.lit(0).cast("int").alias("attempt"),
             "policy_fetch",
             "policy_freshness",
             "map_path",
@@ -2470,23 +2480,10 @@ class CrawlEngine:
         fresh = inflight_bounce(allowed, inflight)
         # intra-batch duplicate urls: first push wins, later copies bounce
         # (counted below — n_allowed-n_new absorbs them into 'bounced')
-        fresh = _dedupe_batch_urls(fresh)
-        adds = scalable_rank_by_key(
-            fresh, ["url"], "_rank", persisted=persisted
-        ).select(
-            "url",
-            "type",
-            "tier",
-            "host",
-            (F.lit(next_seq) + F.col("_rank")).cast("long").alias("enqueue_seq"),
-            F.col("attempt").cast("int"),
-            "policy_fetch",
-            "policy_freshness",
-            "map_path",
-            F.array().cast("array<string>").alias("history"),
-            F.lit(None).cast("string").alias("payload_id"),
-            root_urn(F.lit("host"), F.col("host")).alias("qualifier"),
-            "map_name",
+        fresh = _dedupe_batch_urls(fresh, _REQUEST_ORDER)
+        adds = _root_rows(
+            scalable_rank_by_key(fresh, ["url"], "_rank", persisted=persisted),
+            next_seq,
         )
         n_new = adds.count()
         n_allowed = allowed.count()
@@ -2498,13 +2495,9 @@ class CrawlEngine:
             self.store.write_append(
                 rnd,
                 "deadletter_adds",
-                malformed.select(
-                    F.coalesce(F.col("url"), F.lit("")).alias("url"),
-                    F.coalesce(F.col("type"), F.lit("")).alias("type"),
-                    F.col("_tier_raw").alias("tier"),
-                    F.lit(rnd).alias("round"),
-                    F.lit(0).cast("int").alias("attempt"),
-                    F.lit("malformed").alias("reason"),
+                _deadletter_rows(
+                    malformed.fillna("", ["url", "type"]), rnd, "malformed",
+                    tier=F.col("_tier_raw"), attempt=F.lit(0),
                 ),
             )
         if n_denied:
@@ -2611,51 +2604,27 @@ class CrawlEngine:
         # bounce broadcasts the requeue batch when it is small (the common
         # admin case) and falls back to a shuffle anti-join above the gate —
         # the frontier itself never exchanges in the broadcast regime.
-        cand = to_requeue.select("url", "type", "tier")
-        w_dup = Window.partitionBy("url").orderBy("type", "tier")
-        cand = (
-            cand.withColumn("_dup_rn", F.row_number().over(w_dup))
-            .filter(F.col("_dup_rn") == 1)
-            .drop("_dup_rn")
-            .persist()  # read 3x: the count gate, the bounce, the rank
-        )
+        cand = _dedupe_batch_urls(
+            to_requeue.select("url", "type", "tier"), ("type", "tier")
+        ).persist()  # read 3x: the count gate, the bounce, the rank
         inflight = self._read_frontier(version, bases).select("url")
         n_cand = cand.count()
         if n_cand == 0:
             cand.unpersist()
             return 0
         persisted: list = [cand]
-        if n_cand <= self.cfg.dedup_broadcast_max:
+        if n_cand <= CONFIRM_BROADCAST_MAX:
             cand = inflight_bounce(cand, inflight)
         else:
             cand = cand.join(inflight, "url", "left_anti")
-        revived = (
-            scalable_rank_by_key(
-                cand,
-                ["url"],
-                "_rank",
-                persisted=persisted,
-            )
-            .withColumn("host", extract_host(F.col("url")))
-            .withColumn(
-                "enqueue_seq", (F.lit(next_seq) + F.col("_rank")).cast("long")
-            )
-            .withColumn("attempt", F.lit(0).cast("int"))
-            .select(
-                "url",
-                "type",
-                "tier",
-                "host",
-                "enqueue_seq",
-                "attempt",
-                F.lit("originStorage").alias("policy_fetch"),
-                F.lit("match").alias("policy_freshness"),
-                F.lit("/").alias("map_path"),
-                F.array().cast("array<string>").alias("history"),
-                F.lit(None).cast("string").alias("payload_id"),
-                root_urn(F.lit("host"), F.col("host")).alias("qualifier"),
-                F.lit("default").alias("map_name"),
-            )
+        revived = _root_rows(
+            scalable_rank_by_key(cand, ["url"], "_rank", persisted=persisted),
+            next_seq,
+            host=extract_host(F.col("url")),
+            policy_fetch=F.lit("originStorage"),
+            policy_freshness=F.lit("match"),
+            map_path=F.lit("/"),
+            map_name=F.lit("default"),
         )
         n_revived = revived.count()
 

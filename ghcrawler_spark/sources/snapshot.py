@@ -4,8 +4,9 @@ Emulates the Iceberg snapshot semantics the engine is designed for
 (north_rule: "state checkpoints to Iceberg snapshots so a killed run resumes
 exactly") in an environment without Iceberg jars:
 
-- every round writes all state tables (frontier, seen, docs, order_log,
-  host_state, metrics, deadletter) under ``v{NNNN}/<table>/``;
+- a round writes only the rows it touched, as per-table delta dirs
+  (``<table>/delta_v{NNNN}/``); base tables under ``v{NNNN}/<table>/`` are
+  written at seed and at every compaction (the two table sections below);
 - the commit is a single ``os.replace`` of ``_manifest.json`` — POSIX-atomic,
   so a crash mid-round leaves the manifest pointing at the previous complete
   snapshot and the half-written version directory is simply ignored (and
@@ -15,8 +16,9 @@ exactly") in an environment without Iceberg jars:
 
 On a real cluster this class is replaced 1:1 by an Iceberg catalog
 (``df.writeTo(tbl).overwritePartitions()`` + snapshot tags per round); the
-engine only touches the four methods below. The reference's equivalent
-durability story is ack-last at-least-once over external queues+stores
+engine writes through ``write_tables``/``write_append``, reads state through
+``read_merged`` and makes a round visible with ``commit``. The reference's
+equivalent durability story is ack-last at-least-once over external queues+stores
 (lib/crawler.js:213-302); snapshot-per-round is strictly stronger
 (exactly-once per round, SURVEY.md §4 hard parts).
 """
@@ -147,14 +149,15 @@ class SnapshotStore:
 
     # -- append-only tables ---------------------------------------------------
     #
-    # Full-state tables (frontier, host_state) are rewritten per round — they
-    # churn. History tables (order_log, seen, docs, deadletter, excluded,
-    # metrics) only ever GROW; rewriting them per round is O(total²) I/O over
-    # a crawl. Instead each round writes a DELTA directory
+    # History tables (order_log, seen, docs, deadletter, excluded, metrics,
+    # lineage, tombstones) only ever GROW; rewriting them per round is
+    # O(total²) I/O over a crawl. Instead each round writes a DELTA directory
     # (``<name>/delta_v{round}``) and readers union the deltas up to the
     # committed round — exactly Iceberg's append-snapshot model. Deltas
     # beyond the committed manifest round are orphans from a crashed round;
-    # they are ignored on read and overwritten on replay.
+    # they are ignored on read and overwritten on replay. State tables
+    # (frontier, host_state, ...) write their per-round deltas the same way
+    # and are read merged with a base (next section).
 
     def _delta_dir(self, name: str, version: int) -> str:
         return os.path.join(self.root, name, f"delta_v{version:06d}")
@@ -275,30 +278,43 @@ class SnapshotStore:
         spark: SparkSession,
         name: str,
         version: int,
-        base_version: int,
+        base_version: int | None,
         key_col: str | None = None,
+        deltas: str | None = None,
+        merge_schema: bool = False,
     ) -> DataFrame:
-        """base(base_version) ∪ adds in (base_version, version], minus
-        removes in the same range when ``key_col`` is given. Schema drift
-        across engine upgrades is tolerated: adds dirs are read with merged
-        schemas and the union fills columns either side lacks with null —
-        the reader defaults them (see CrawlEngine._read_frontier)."""
-        out = self.read(spark, name, base_version)
+        """The one merge-on-read: base ``name`` table of ``base_version`` ∪
+        the ``deltas`` table's dirs (default ``<name>_adds``) in
+        (base_version, version], minus ``<name>_removes`` keys in the same
+        range when ``key_col`` is given. ``base_version=None`` means no base:
+        the deltas from v0 alone (FileNotFoundError if there are none); a
+        base with no deltas past it reads alone. Deltas past ``version`` are
+        orphans of a crashed round and never read.
+
+        ``merge_schema`` reads the delta dirs with merged footer schemas, so
+        a column added by an engine upgrade survives in old and new deltas
+        alike; it costs a schema-merge job, so only tables that grew columns
+        use it. The union fills columns either side lacks with null — the
+        caller defaults them (see CrawlEngine._read_frontier)."""
+        deltas = deltas or f"{name}_adds"
+        out, first = None, 0
+        if base_version is not None:
+            out, first = self.read(spark, name, base_version), base_version + 1
         try:
             adds = self.read_appends(
-                spark,
-                f"{name}_adds",
-                version,
-                from_version=base_version + 1,
-                merge_schema=True,
+                spark, deltas, version, from_version=first,
+                merge_schema=merge_schema,
             )
-            out = out.unionByName(adds, allowMissingColumns=True)
+            out = adds if out is None else out.unionByName(
+                adds, allowMissingColumns=True
+            )
         except FileNotFoundError:
-            pass
+            if out is None:
+                raise
         if key_col is not None:
             try:
                 removes = self.read_appends(
-                    spark, f"{name}_removes", version, from_version=base_version + 1
+                    spark, f"{name}_removes", version, from_version=first
                 )
                 out = out.join(
                     removes.select(key_col).distinct(), key_col, "left_anti"

@@ -54,7 +54,7 @@ def _build(spark, tmp_path, corpus, links, seeds, cfg_kw):
     sim = ReferenceSimulator(dict(corpus), sim_links, SimConfig(**{
         k: v for k, v in cfg_kw.items()
         if k not in ("bloom_shards", "bloom_fpr", "compact_every",
-                     "validate_images", "ingest_dir", "politeness_salt",
+                     "validate_images", "ingest_dir",
                      "politeness_hot_threshold")
     }))
     return eng, store, sim, seeds_df
